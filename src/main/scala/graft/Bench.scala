@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // JSON number formatting, page-cache pre-fault, and the contention
   // sentinel live in BenchKit — shared with ScaleCurve so both timing
@@ -9,13 +8,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Same pass-through Verify has: SPARK_GRAFT_MATERIALIZE routes every
     // Materialize point through the named mode for mode A/B runs; the

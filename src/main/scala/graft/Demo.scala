@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{Ingest, Pipeline}
 import graft.sources.{IO, Schemas}
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end smoke of the reference lifecycle (SURVEY.md §3): synthetic
   * producers → raw NDJSON zone → validate → transform → curated partitioned
@@ -12,10 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("target/demo")
-    val spark = GraftSession.builder() // engine defaults + extensions
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
       .config("spark.sql.warehouse.dir", s"$root/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -32,7 +32,10 @@ import org.apache.spark.sql.SparkSession
   *    or leave AQE's coalescing to trim an over-provisioned width).
   *  - `spark.sql.files.maxPartitionBytes`: 128-256 MB so scan tasks
   *    amortize scheduling but never hold more than a few row groups.
-  *  Local test mains pass cores-sized values explicitly (Bench/Verify).
+  *  [[local]] is the local entry point: one shuffle partition per core.
+  *  Bench, Verify, ScaleCurve, PlanAudit, Demo and the test suite all
+  *  build their session through it, so what is tested and benched is
+  *  the session the engine ships.
   */
 object GraftSession {
 
@@ -46,4 +49,14 @@ object GraftSession {
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+
+  /** [[builder]] on `local[cores]`, with one shuffle partition per core
+    * and the UI off; callers add only their own extras (app name,
+    * warehouse dir), then `getOrCreate()`.
+    */
+  def local(cores: Int): SparkSession.Builder =
+    builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
 }

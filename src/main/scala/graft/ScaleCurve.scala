@@ -190,13 +190,7 @@ object ScaleCurve {
     val benchPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_BENCH",
       "bench/bench.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import BenchKit.jn
 

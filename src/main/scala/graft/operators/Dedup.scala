@@ -41,35 +41,6 @@ object Dedup {
     docs.withColumn("fp", TextAnalysis.fingerprint(col("text")))
       .groupBy("fp").agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("copies"))
 
-  /** MinHash signature: `numHashes` independent min-hashes over word
-    * shingles. The shingle strings are hashed ONCE (the expensive part);
-    * the i-th permutation is a cheap 64-bit mix of that base hash
-    * (xor-multiply family), not a fresh string hash — numHashes× less
-    * string hashing for the same LSH behavior.
-    */
-  def minhashSignature(text: Column, shingleK: Int, numHashes: Int): Column =
-    minhashFromShingles(TextAnalysis.shingles(text, shingleK), numHashes)
-
-  /** LSH banding of a minhash signature: `bands` rows of `rowsPerBand`
-    * hashes each; docs sharing any (band, bandHash) are candidates. The
-    * band key is xxhash64 over the band's long values directly (plus the
-    * band index) — candidacy is still exactly "equal band slice", but
-    * without materializing a comma-joined string per band per doc
-    * through interpreted lambdas.
-    *
-    * KEPT AS THE SEMANTIC REFERENCE ONLY (spec-tested bit-identical to
-    * the fused path): feeding it `minhashFromShingles(...)` through an
-    * alias is a trap — CollapseProject inlines the signature into every
-    * `element_at`, re-running the whole minhash loop numHashes times per
-    * row. The pipeline uses [[graft.functions.LshBands]], which fuses
-    * signature + banding into one pass.
-    */
-  private[graft] def bandHashesColumns(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
-        element_at(sig, b * rowsPerBand + r + 1))): _*)
-    }: _*)
-
   /** MinHash+LSH near-duplicate pairs with exact Jaccard verification.
     *
     * Pipeline: signature → explode bands → group by (band, hash) bucket →
@@ -83,7 +54,6 @@ object Dedup {
     */
   def minhashNearDups(docs: DataFrame, shingleK: Int = 3, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.6,
-      pruneSingletonBuckets: Boolean = false,
       selfJoinPairs: Boolean = false): DataFrame = {
     val rowsPerBand = numHashes / bands
     // Shingle ONCE per document — recomputing per candidate pair would be
@@ -103,22 +73,8 @@ object Dedup {
     val banded = sh.filter(size(col("sh")) > 0).select(col("doc_id"),
         posexplode(graft.functions.SketchFunctions.lsh_bands(col("sh"), numHashes, bands)))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("bh"))
-    // Optional singleton-bucket prefilter: buckets holding one doc can't
-    // produce a pair, and on a mostly-unique corpus they are most of the
-    // band relation. MEASURED OFF-BY-DEFAULT: unlike the winnowing df≥2
-    // prefilter (which pays because the exploded fp relation is huge and
-    // reused), `banded` here is cheap to ship but EXPENSIVE TO COMPUTE
-    // (the minhash pass), and the prefilter adds a third computation of
-    // it — 1M-doc probe: 25→40s dup-dense, 19→33s at 10% dup rate. Turn
-    // it on only when `docs` is already materialized cheap (e.g. sigs
-    // persisted) AND the corpus is dominated by singletons. Results are
-    // identical either way.
-    val pairable =
-      if (!pruneSingletonBuckets) banded
-      else banded.join(
-        banded.groupBy("band", "bh").agg(count(lit(1)).as("n"))
-          .filter(col("n") >= 2).select("band", "bh"),
-        Seq("band", "bh"))
+    // No singleton-bucket prefilter: it would compute `banded` (the
+    // minhash pass) a third time — measured 25→40 s on a 1M-doc corpus.
     // Candidate pairs via ONE shuffle: group each (band, bucket) to its
     // sorted member list, then emit ordered pairs in-row. The textbook
     // formulation is a bucket-keyed SELF-JOIN, but a self-join plans the
@@ -131,13 +87,13 @@ object Dedup {
     // the uniform bucket key; the posexplode keeps peak memory at O(n)
     // per row rather than materializing an n² pair array per bucket.
     val candidates = (if (selfJoinPairs) {
-      pairable.select(col("band"), col("bh"), col("doc_id").as("a_id"))
-        .join(pairable.select(col("band"), col("bh"), col("doc_id").as("b_id")),
+      banded.select(col("band"), col("bh"), col("doc_id").as("a_id"))
+        .join(banded.select(col("band"), col("bh"), col("doc_id").as("b_id")),
           Seq("band", "bh"))
         .filter(col("a_id") < col("b_id"))
         .select("a_id", "b_id")
     } else {
-      val buckets = pairable.groupBy(col("band"), col("bh"))
+      val buckets = banded.groupBy(col("band"), col("bh"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
         .filter(size(col("ids")) >= 2)
       buckets
@@ -176,10 +132,6 @@ object Dedup {
   private def sizeRatioMayReach(sa: Column, sb: Column, threshold: Double): Column =
     size(sa).cast("double") >= lit(threshold) * size(sb) &&
       size(sb).cast("double") >= lit(threshold) * size(sa)
-
-  /** Exact n-gram Jaccard between two raw texts (convenience form). */
-  def jaccardShingles(a: Column, b: Column, k: Int): Column =
-    jaccardOfShingleArrays(TextAnalysis.shingles(a, k), TextAnalysis.shingles(b, k))
 
   /** All-pairs n-gram Jaccard above a threshold. Exact but O(n²) pairs —
     * the verification metric; use minhashNearDups for candidate generation
@@ -327,11 +279,9 @@ object Dedup {
     */
   def winnowingNearDups(docs: DataFrame, k: Int = 5, w: Int = 4,
       minContainment: Double = 0.5, maxDocFreq: Int = 50,
-      scratchDir: Option[String] = None,
-      selfJoinPairs: Boolean = false,
-      pinGrouped: Boolean = false): DataFrame = {
+      selfJoinPairs: Boolean = false): DataFrame = {
     if (selfJoinPairs)
-      return winnowingNearDupsSelfJoin(docs, k, w, minContainment, maxDocFreq, scratchDir)
+      return winnowingNearDupsSelfJoin(docs, k, w, minContainment, maxDocFreq)
     val exploded = docs.select(col("doc_id"),
       explode(TextAnalysis.winnowingFingerprints(col("text"), k, w)).as("fp"))
     // ONE shuffle keyed on fp groups each fingerprint to its sorted
@@ -346,33 +296,13 @@ object Dedup {
     // docs is boilerplate, not evidence of copying — and exactly what
     // would make pair emission quadratic (d docs → d² pairs), so the
     // cap also bounds every bucket's fan-out.
-    val groupedRaw = exploded.groupBy("fp")
+    // The grouped relation is deliberately not pinned: measured on the
+    // d7 corpus (sf0.1, min-of-3), a pin cost 27.7 s vs 27.1 s unpinned,
+    // and a parquet scratch copy 60 s vs 22 s at 1M docs — fingerprinting
+    // rides the page cache, so one recompute is cheaper than either copy.
+    val grouped = exploded.groupBy("fp")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) <= maxDocFreq)
-    // `scratchDir` materializes the grouped relation to parquet once —
-    // then the fingerprint pass runs ONCE total; the caller owns
-    // cleanup. MEASURED OFF-BY-DEFAULT (1M docs, local[32]): writing the
-    // ~150M-row grouped relation costs more than the one recompute it
-    // saves (22→60 s) because fingerprinting streams from page-cached
-    // source parquet; reach for it only when upstream `docs` is itself
-    // expensive (a join/filter pipeline, cold object storage). Results
-    // identical either way (spec-pinned).
-    val grouped = scratchDir match {
-      case Some(dir) =>
-        groupedRaw.write.mode("overwrite").parquet(dir)
-        docs.sparkSession.read.parquet(dir)
-      // pinGrouped: Materialize the grouped relation so the
-      // tokenize+fingerprint+groupBy pipeline runs ONCE instead of once
-      // per consumer (sizes + shared). Measured round-17 on the d7
-      // corpus with the noop sink (min-of-3, sf0.1): pinned 27.7 s vs
-      // unpinned 27.1 s — the checkpoint of the near-input-size
-      // (fp, ids) relation costs ≥ the one fingerprint recompute it
-      // saves (which rides the page cache), and the uncapped pair
-      // phase dominates either way. OFF stays the default; the knob
-      // records the measurement point.
-      case None if pinGrouped => Materialize(groupedRaw)
-      case None => groupedRaw
-    }
     // containment denominator: how many sub-cap fps each doc kept
     val sizes = grouped.select(explode(col("ids")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_fps"))
@@ -401,16 +331,9 @@ object Dedup {
     * pass once per leaf occurrence (~6×).
     */
   private def winnowingNearDupsSelfJoin(docs: DataFrame, k: Int, w: Int,
-      minContainment: Double, maxDocFreq: Int,
-      scratchDir: Option[String]): DataFrame = {
-    val explodedRaw = docs.select(col("doc_id"),
+      minContainment: Double, maxDocFreq: Int): DataFrame = {
+    val exploded = docs.select(col("doc_id"),
       explode(TextAnalysis.winnowingFingerprints(col("text"), k, w)).as("fp"))
-    val exploded = scratchDir match {
-      case Some(dir) =>
-        explodedRaw.write.mode("overwrite").parquet(dir)
-        docs.sparkSession.read.parquet(dir)
-      case None => explodedRaw
-    }
     val dfByFp = exploded.groupBy("fp").agg(count(lit(1)).as("df"))
     val kept = exploded.join(dfByFp.filter(col("df") <= maxDocFreq).select("fp"), "fp")
     val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("n_fps"))

@@ -60,21 +60,4 @@ object Geo {
       .filter(col("dist2") <= radius * radius)
       .select("a_id", "b_id", "dist2")
   }
-
-  /** The naive O(n²) theta-join form — the spec-tested semantic
-    * reference; never use at scale.
-    */
-  def radiusSelfJoinNaive(points: DataFrame, idCol: String, xCol: String,
-      yCol: String, radius: Double): DataFrame = {
-    val a = points.select(col(idCol).as("a_id"),
-      col(xCol).cast("double").as("ax"), col(yCol).cast("double").as("ay"))
-    val b = points.select(col(idCol).as("b_id"),
-      col(xCol).cast("double").as("bx"), col(yCol).cast("double").as("by"))
-    val d2 = (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-      (col("ay") - col("by")) * (col("ay") - col("by"))
-    a.crossJoin(b).filter(col("a_id") < col("b_id"))
-      .withColumn("dist2", d2)
-      .filter(col("dist2") <= radius * radius)
-      .select("a_id", "b_id", "dist2")
-  }
 }

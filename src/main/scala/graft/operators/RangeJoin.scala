@@ -42,15 +42,4 @@ object RangeJoin {
       .join(counts, Seq(idCol), "left")
       .select(col(idCol), coalesce(col("matches"), lit(0L)).as("matches"))
   }
-
-  /** The naive theta-join form — the semantic reference the bucketed
-    * operator is tested against; O(I×P), never use at scale.
-    */
-  def intervalPointCountNaive(intervals: DataFrame, idCol: String,
-      points: DataFrame, tCol: String): DataFrame = {
-    val p = points.select(col(tCol).as("__t"))
-    intervals.join(p, col("__t") >= col("lo") && col("__t") < col("hi"), "left")
-      .groupBy(col(idCol))
-      .agg(sum(when(col("__t").isNotNull, 1L).otherwise(0L)).as("matches"))
-  }
 }

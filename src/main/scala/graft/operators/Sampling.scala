@@ -24,11 +24,6 @@ object Sampling {
   def hashBucket(id: Column, salt: String, buckets: Int = 100): Column =
     hashValue(id, salt) % buckets
 
-  /** Keep ~pct% of rows, deterministically. */
-  def deterministicSample(df: DataFrame, idCol: String, pct: Int,
-      salt: String = "graft"): DataFrame =
-    df.filter(hashBucket(col(idCol), salt) < pct)
-
   /** Assign train/val/test split labels by hash bucket:
     * [0,trainPct) → train, [trainPct,trainPct+valPct) → val, rest → test.
     */

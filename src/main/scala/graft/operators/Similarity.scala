@@ -21,27 +21,6 @@ object Similarity {
   /** Elementwise float→double view of an embedding. */
   private def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
 
-  /** Dot product via zip_with + aggregate — sequential left-to-right fold,
-    * deterministic, no UDF. Kept as the reference implementation the
-    * native expression is tested against.
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** L2 norm. */
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine via built-in higher-order functions — identical semantics to
-    * `cosine`, ~an order of magnitude slower (three intermediate arrays +
-    * interpreted lambdas). Used only to cross-check the native expression.
-    */
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val n = norm(a) * norm(b)
-    when(n === 0, lit(0.0)).otherwise(d / n)
-  }
-
   /** Cosine similarity; 0.0 when either vector has zero norm. One fused
     * codegen'd loop (graft.functions.CosineSimilarity).
     */

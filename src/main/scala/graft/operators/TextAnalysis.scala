@@ -706,17 +706,6 @@ object TextAnalysis {
   def shingleHashes(text: Column, k: Int): Column =
     graft.functions.SketchFunctions.word_shingle_hashes(tokens(text), k)
 
-  /** The same shingles via built-in higher-order functions — kept as the
-    * semantic reference the native expression is tested against.
-    */
-  def shinglesHof(text: Column, k: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) < k, array().cast("array<string>"))
-      .otherwise(array_distinct(transform(
-        sequence(lit(1), size(toks) - lit(k - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(k))))))
-  }
-
   /** Per-document duplicated-span share — the exact-substring-duplication
     * curation signal (Lee et al. 2022, "Deduplicating Training Data Makes
     * Language Models Better": spans repeated across the corpus are memorized

@@ -69,27 +69,16 @@ object IO {
     * that survives: an hourly sweep rewrites hours, not history.
     */
   def writeCuratedParquet(df: DataFrame, path: String,
-      partitionCols: Seq[String] = Seq("date"), dynamic: Boolean = true,
-      compact: Boolean = false, filesPerPartition: Int = 1): Unit = {
-    // compact=true repartitions on (partition cols, bounded salt) first,
-    // so each output partition is written by exactly `filesPerPartition`
-    // tasks — instead of one file per task per partition, which at
-    // tasks × partitions fan-out is the small-file catastrophe (measured
-    // here: 12M rows across 1737 date partitions wrote 32× more files
-    // uncompacted and made even partition-pruned reads listing-bound).
-    // Costs one shuffle. Size filesPerPartition so files land at a few
-    // hundred MB at production scale.
-    val src =
-      if (!compact) df
-      else if (filesPerPartition <= 1) df.repartition(partitionCols.map(df.col): _*)
-      else df.repartition(
-        partitionCols.map(df.col) :+
-          org.apache.spark.sql.functions.pmod(
-            org.apache.spark.sql.functions.spark_partition_id()
-              + org.apache.spark.sql.functions.monotonically_increasing_id(),
-            org.apache.spark.sql.functions.lit(filesPerPartition)): _*)
+      partitionCols: Seq[String] = Seq("date"), compact: Boolean = false): Unit = {
+    // compact=true repartitions on the partition cols first, so each
+    // output partition is written by one task — instead of one file per
+    // task per partition, which at tasks × partitions fan-out is the
+    // small-file catastrophe (measured here: 12M rows across 1737 date
+    // partitions wrote 32× more files uncompacted and made even
+    // partition-pruned reads listing-bound). Costs one shuffle.
+    val src = if (compact) df.repartition(partitionCols.map(df.col): _*) else df
     src.write.mode("overwrite")
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .option("compression", "snappy")
       .parquet(path)

@@ -120,7 +120,7 @@ object Lakehouse {
       .filter(col(partitionCol).isin(parts: _*))
     val merged = upsert(target, source.select(target.columns.map(col).toIndexedSeq: _*), keys)
     val rows = merged.persist().count()
-    IO.writeCuratedParquet(merged, path, Seq(partitionCol), dynamic = true, compact = true)
+    IO.writeCuratedParquet(merged, path, Seq(partitionCol), compact = true)
     merged.unpersist(blocking = false)
     MergeStats(parts, rows)
   }

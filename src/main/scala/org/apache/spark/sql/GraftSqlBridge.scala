@@ -11,14 +11,6 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Apply a SparkSessionExtensions' injected functions to an existing
-    * session's registry (what SparkSession.builder does at build time;
-    * `registerFunctions` is private[sql]).
-    */
-  def registerExtensionFunctions(ext: SparkSessionExtensions,
-      registry: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit =
-    ext.registerFunctions(registry)
-
   /** DataFrame from a custom LogicalPlan (Dataset.ofRows is private[sql]) —
     * the construction path for custom logical operators like
     * graft.plans.SkylineNode.

@@ -1,20 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-
 /** SQL-surface registration of the custom expressions through
-  * SparkSessionExtensions. A shared test session already exists, so the
-  * extension is applied to its function registry via the same
-  * `registerFunctions` path SparkSession.builder uses at build time.
+  * GraftExtensions. The shared test session is built by
+  * `GraftSession.local`, so the functions resolve with no manual
+  * registration — exactly as in the shipped session.
   */
 class ExtensionsSpec extends SparkSpec {
 
-  test("custom expressions are callable from SQL via GraftExtensions") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions()(ext)
-    org.apache.spark.sql.GraftSqlBridge.registerExtensionFunctions(
-      ext, spark.sessionState.functionRegistry)
+  test("the shared test session is the shipped GraftSession") {
+    import spark.implicits._
+    Seq("a", "b", "a").toDF("item").createOrReplaceTempView("shipped_items")
+    val row = spark.sql(
+      """SELECT cosine_sim(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS cos,
+        |  count_min(item, 64, 4, array('a')) AS cms
+        |FROM shipped_items""".stripMargin).head()
+    assert(row.getDouble(0) == 0.0)
+    assert(row.getSeq[org.apache.spark.sql.Row](1).map(_.getAs[Long]("est_cnt")) == Seq(2L))
+    assert(spark.conf.get("spark.sql.extensions").split(",").map(_.trim)
+      .contains(classOf[GraftExtensions].getName))
+    assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+      .equalsIgnoreCase("dynamic"))
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
 
+  test("custom expressions are callable from SQL via GraftExtensions") {
     val row = spark.sql(
       """SELECT
         |  cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS cos,
@@ -38,11 +47,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("aggregate sketches are SQL-callable: count_min over a grouped stream") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions()(ext)
-    org.apache.spark.sql.GraftSqlBridge.registerExtensionFunctions(
-      ext, spark.sessionState.functionRegistry)
-
     import spark.implicits._
     Seq("a", "b", "a", "a", "b", "c").toDF("item")
       .createOrReplaceTempView("cms_items")

@@ -47,10 +47,6 @@ class JaroWinklerSpec extends AnyFunSuite with SparkSpec {
       .collect().map(_.getDouble(0)).toSeq
     val expected = Seq(jw("MARTHA", "MARHTA"), jw("NATION_1", "NATION_12"), 0.0)
     assert(viaCol == expected)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions()(ext)
-    org.apache.spark.sql.GraftSqlBridge.registerExtensionFunctions(
-      ext, spark.sessionState.functionRegistry)
     df.createOrReplaceTempView("jw_pairs")
     val viaSql = spark.sql("SELECT jaro_winkler(a, b) AS jw FROM jw_pairs")
       .collect().map(_.getDouble(0)).toSeq

@@ -74,7 +74,7 @@ class PipelineOpsSpec extends SparkSpec {
       (i, lo, lo + 1 + rnd.nextInt(500))
     }.toDF("id", "lo", "hi")
     val points = Seq.fill(600)(rnd.nextInt(11000).toLong).toDF("t")
-    val naive = RangeJoin.intervalPointCountNaive(intervals, "id", points, "t")
+    val naive = Oracles.intervalPointCountNaive(intervals, "id", points, "t")
       .orderBy("id").as[(Long, Long)].collect().toSeq
     for (w <- Seq(7L, 256L, 5000L)) {
       val bucketed = RangeJoin.intervalPointCount(intervals, "id", points, "t", w)
@@ -523,7 +523,7 @@ class PipelineOpsSpec extends SparkSpec {
     for (r <- Seq(2.0, 5.0)) {
       val fast = Geo.radiusSelfJoin(pts, "id", "x", "y", r)
         .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-      val naive = Geo.radiusSelfJoinNaive(pts, "id", "x", "y", r)
+      val naive = Oracles.radiusSelfJoinNaive(pts, "id", "x", "y", r)
         .select("a_id", "b_id").as[(Long, Long)].collect().toSet
       assert(fast == naive, s"r=$r mismatch")
       assert(fast.contains((902L, 903L)), "cross-cell near pair missed")
@@ -557,12 +557,8 @@ class PipelineOpsSpec extends SparkSpec {
     val fastN = Skyline.skyline(withNaN, dims).select("id").as[Long].collect().toSet
     val naiveN = Skyline.skylineNaive(withNaN, dims).select("id").as[Long].collect().toSet
     assert(fastN == fast && naiveN == fast, "NaN row must be dropped, not kept forever")
-    val prevStrat = spark.experimental.extraStrategies
-    spark.experimental.extraStrategies = prevStrat :+ graft.plans.SkylineStrategy
-    try {
-      val execN = Skyline.skylineExec(withNaN, dims).select("id").as[Long].collect().toSet
-      assert(execN == fast, "SkylineExec must drop NaN rows like the other forms")
-    } finally spark.experimental.extraStrategies = prevStrat
+    val execN = Skyline.skylineExec(withNaN, dims).select("id").as[Long].collect().toSet
+    assert(execN == fast, "SkylineExec must drop NaN rows like the other forms")
     // every non-skyline row is dominated by some skyline row
     val sky = rows.filter(r => fast.contains(r._1))
     rows.filterNot(r => fast.contains(r._1)).foreach { a =>
@@ -578,19 +574,15 @@ class PipelineOpsSpec extends SparkSpec {
       (i.toLong, rnd.nextInt(50), math.floor(rnd.nextDouble() * 500) / 10))
       .toDF("id", "size", "price").repartition(9)
     val dims = Seq(("price", true), ("size", false))
-    val prev = spark.experimental.extraStrategies
-    spark.experimental.extraStrategies = prev :+ graft.plans.SkylineStrategy
-    try {
-      val execDf = Skyline.skylineExec(df, dims)
-      // physical nodes print without the Exec suffix
-      val plan = execDf.queryExecution.executedPlan.toString
-      assert(plan.contains("Skyline ["), s"expected the Skyline physical node in:\n$plan")
-      val got = execDf.select("id").as[Long].collect().toSet
-      val expected = Skyline.skyline(df, dims).select("id").as[Long].collect().toSet
-      assert(got == expected)
-      // physical output is a single partition — downstream ops see that
-      assert(execDf.rdd.getNumPartitions == 1)
-    } finally spark.experimental.extraStrategies = prev
+    val execDf = Skyline.skylineExec(df, dims)
+    // physical nodes print without the Exec suffix
+    val plan = execDf.queryExecution.executedPlan.toString
+    assert(plan.contains("Skyline ["), s"expected the Skyline physical node in:\n$plan")
+    val got = execDf.select("id").as[Long].collect().toSet
+    val expected = Skyline.skyline(df, dims).select("id").as[Long].collect().toSet
+    assert(got == expected)
+    // physical output is a single partition — downstream ops see that
+    assert(execDf.rdd.getNumPartitions == 1)
   }
 
   test("bpeTrain: hand-computed merges, frequency weighting, deterministic ties") {

@@ -132,6 +132,24 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/curated").count() == 100)
   }
 
+  test("curated write replaces only the partitions it carries, whatever the session mode") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(key)
+    try Seq("dynamic", "static").foreach { mode =>
+      spark.conf.set(key, mode)
+      val path = s"${tmp()}/curated"
+      IO.writeCuratedParquet(
+        Seq(("a", 1, "2026-08-01"), ("b", 2, "2026-08-01"), ("c", 3, "2026-08-02"))
+          .toDF("k", "v", "date"), path)
+      IO.writeCuratedParquet(
+        Seq(("c", 30, "2026-08-02"), ("d", 40, "2026-08-02")).toDF("k", "v", "date"), path)
+      val rows = spark.read.parquet(path).as[(String, Int, String)].collect().toSet
+      assert(rows == Set(("a", 1, "2026-08-01"), ("b", 2, "2026-08-01"),
+        ("c", 30, "2026-08-02"), ("d", 40, "2026-08-02")), s"session mode $mode")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("ndjson round-trip preserves values") {
     val root = tmp()
     import spark.implicits._

@@ -19,10 +19,9 @@ import org.scalatest.Tag
 object Slow extends Tag("Slow")
 
 /** The scale probes' counts, promoted from printed diagnostics to
-  * asserted regression gates. The standalone `*ScaleProbe` mains remain
-  * the full-size wall-clock instruments; this spec drives the SAME
-  * deterministic generators at a reduced-but-still-2-orders-above-bench
-  * size and asserts the COUNTS (never the seconds), so silent semantic
+  * asserted regression gates. This spec drives the probes' deterministic
+  * generators at a reduced-but-still-2-orders-above-bench size and
+  * asserts the COUNTS (never the seconds), so silent semantic
   * drift in the scale paths — a changed hash, a lost pair strategy, an
   * audit miscount — fails a test instead of quietly shifting a printed
   * number nobody diffs.
@@ -39,7 +38,7 @@ class ScaleProbeSpec extends SparkSpec {
 
   import spark.implicits._
 
-  // --- DedupScaleProbe's corpus (groups of 5 sharing a mutated template) ---
+  // --- the dedup probe's corpus (groups of 5 sharing a mutated template) ---
   private def dedupCorpus(nDocs: Long, dupPct: Int): DataFrame = spark.range(nDocs)
     .select(col("id").as("doc_id"),
       concat_ws(" ", transform(sequence(lit(0), lit(99)), i => {
@@ -74,17 +73,13 @@ class ScaleProbeSpec extends SparkSpec {
 
     val wGrouped = Dedup.winnowingNearDups(mat, k = 5, w = 4,
       minContainment = 0.6, maxDocFreq = 50).count()
-    val wScratch = Dedup.winnowingNearDups(mat, k = 5, w = 4,
-      minContainment = 0.6, maxDocFreq = 50,
-      scratchDir = Some("target/probe_spec_fps")).count()
     val wSelfJoin = Dedup.winnowingNearDups(mat, k = 5, w = 4,
       minContainment = 0.6, maxDocFreq = 50, selfJoinPairs = true).count()
-    println(s"[probe-spec] winnowing pairs grouped=$wGrouped scratch=$wScratch selfJoin=$wSelfJoin")
-    assert(wGrouped == wScratch && wGrouped == wSelfJoin,
-      "winnowing formulations must agree")
+    println(s"[probe-spec] winnowing pairs grouped=$wGrouped selfJoin=$wSelfJoin")
+    assert(wGrouped == wSelfJoin, "winnowing formulations must agree")
   }
 
-  // --- GraphScaleProbe's graphs (uniform + celebrity-core skew) ---
+  // --- the graph probe's graphs (uniform + celebrity-core skew) ---
   private val nEdges = 300000L
 
   test("graph probe: oriented triangle count equals naive, skew completes", Slow) {
@@ -114,7 +109,7 @@ class ScaleProbeSpec extends SparkSpec {
     assert(skewCount > 0L, "celebrity core must close triangles")
   }
 
-  // --- SimilarityScaleProbe's clustered embedding corpus ---
+  // --- the similarity probe's clustered embedding corpus ---
   private val nVecs = 100000L
 
   test("similarity probe: IVF recall floor vs brute force on clustered corpus", Slow) {
@@ -146,7 +141,7 @@ class ScaleProbeSpec extends SparkSpec {
       f"clustered corpus at nprobe=32/${nc} cells must recall >= 0.8, got $recall%.3f")
   }
 
-  // --- CurationScaleProbe's pipeline (three audit shapes must agree) ---
+  // --- the curation probe's pipeline (three audit shapes must agree) ---
   private val nCurationDocs = 100000L
 
   test("curation probe: single-pass, eager-audit, and observed counts agree", Slow) {
@@ -515,7 +510,7 @@ class ScaleProbeSpec extends SparkSpec {
     assert(re == removed, s"removal must be partitioning-invariant: $re vs $removed")
   }
 
-  // --- LakehouseScaleProbe's skip-index / z-order / merge claims ---
+  // --- the lakehouse probe's skip-index / z-order / merge claims ---
   private val nLakeRows = 2000000L
 
   test("lakehouse probe: pruned scans match full scan, merge preserves rows", Slow) {

@@ -136,10 +136,6 @@ class SketchAggSpec extends SparkSpec {
     (0 until n).count(i => i % 2 == 0 || i % 3 == 0).toDouble
 
   test("sketch aggregates are SQL-callable via GraftExtensions") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions()(ext)
-    org.apache.spark.sql.GraftSqlBridge.registerExtensionFunctions(
-      ext, spark.sessionState.functionRegistry)
     val events = graft.sources.Tables.load(spark, sfDir, "events")
     events.createOrReplaceTempView("ev_sketch")
     val viaSql = spark.sql(

@@ -32,7 +32,8 @@ object ProfileSink {
       time("derive+collect (no write)") { events.count() }
       time("write dynamic partitioned") { IO.writeCuratedParquet(events, "target/qtmp/prof_dyn") }
       time("write static partitioned") {
-        IO.writeCuratedParquet(events, "target/qtmp/prof_static", dynamic = false)
+        events.write.mode("overwrite").option("partitionOverwriteMode", "static")
+          .partitionBy("date").parquet("target/qtmp/prof_static")
       }
       time("write unpartitioned") {
         events.write.mode("overwrite").parquet("target/qtmp/prof_flat")
