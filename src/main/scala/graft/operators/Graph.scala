@@ -62,14 +62,18 @@ object Graph {
 
   /** The pair-explosion half of [[cooccurrencePairs]] over a prebuilt
     * (sorted, distinct) basket-array relation — map-side, inside codegen.
+    * The lambdas are built with the Column API, which names their
+    * variables afresh, so a basket column called `x` or `i` (or one
+    * that needs quoting) cannot be shadowed by them.
     */
-  def basketPairs(baskets: DataFrame, basketCol: String): DataFrame =
+  def basketPairs(baskets: DataFrame, basketCol: String): DataFrame = {
+    val basket = col(basketCol)
     baskets
-      .select(explode(expr(
-        s"""flatten(transform($basketCol,
-          |  (x, i) -> transform(slice($basketCol, i + 2, size($basketCol)),
-          |            y -> struct(x AS pa, y AS pb))))""".stripMargin)).as("p"))
+      .select(explode(flatten(transform(basket, (x, i) =>
+        transform(slice(basket, i + 2, size(basket)),
+          y => struct(x.as("pa"), y.as("pb")))))).as("p"))
       .select(col("p.pa").as("pa"), col("p.pb").as("pb"))
+  }
 
   /** Canonical undirected edge list: (u < v), loops dropped, duplicates
     * collapsed. Input columns may list either endpoint first.

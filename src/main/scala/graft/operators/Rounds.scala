@@ -1,49 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.ClassTag
 
-/** Scoped physical-planning overrides for DRIVER-BOUND iterative
-  * rounds (IRLS/Newton, boosting, fixed-point strength updates): loops
-  * that run one tiny-output aggregation job per round over a pinned
-  * table. Profiled on ml11 (19 IRLS rounds over a 4838-row pinned
-  * projection, sf0.1/local[32]): 66 Spark jobs but only ~0.6 s of
-  * summed task time in ~3.6 s of wall — the cost is driver scheduling
-  * and per-round (re)planning, not compute. Two session settings feed
-  * that overhead and buy nothing for this shape:
-  *
-  *  - AQE turns every round into a multi-job query (one job per
-  *    shuffle stage plus the broadcast) and re-optimizes a plan whose
-  *    reduce side it cannot improve — the aggregate output is
-  *    O(groups · state) KILOBYTES by the caller's own contract.
-  *  - The session shuffle-partition count fans those few KB into
-  *    dozens of sub-millisecond reduce tasks per round.
-  *
-  * [[driverBound]] scopes `spark.sql.adaptive.enabled = false` plus a
-  * shuffle-partition count DERIVED from the loop's own reduce size to
-  * the loop body, and restores the prior values on every exit path.
-  * Measured on ml11: 3.13 s → 2.25 s (min-of-3 each) for the fit.
-  *
-  * This is deliberately NOT blanket config (guide §1.2: config last,
-  * and never constants tuned to one box): `reduceBytes` names the
-  * per-round aggregate output size — groups × per-group state — so the
-  * partition count scales with the problem (clamped to
-  * [1, defaultParallelism] at ~64 KiB per reduce task) and the
-  * override dies with the loop. Callers whose per-round relations are
-  * CORPUS-sized (graph rounds over edge tables) must size
-  * `reduceBytes` from the real per-round relation, not the collected
-  * state, or not use this at all. MEASURED HAZARD: do not wrap loops
-  * containing HINT-LESS joins — with AQE off their strategy falls back
-  * to the static planner, which cannot prove a pinned-RDD build side
-  * small (no statistics) and picks sort-merge; kCore under this helper
-  * went 1.5 → 8.2 s at sf0.1 before the revert. Of the wrapped loops,
-  * the Newton trainers broadcast-hint their only join and the boosters
-  * join nothing; bradleyTerryFit's strength joins are hint-less but
-  * both sides are the SAME O(items) cardinality, so sort-merge is the
-  * right strategy with or without AQE (measured neutral). NOT
-  * thread-safe against concurrent
-  * queries on the same session (session-level conf) — the engine's
-  * batch drivers run queries serially; the streaming path never calls
-  * into these trainers.
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
+
+/** Helpers for DRIVER-BOUND iterative rounds (IRLS/Newton, boosting,
+  * fixed-point strength updates, centroid refinement): loops that run
+  * one tiny-output aggregation job per round over a pinned relation.
+  * [[Rounds.pinned]] runs such rounds as RDD folds; [[Rounds.driverBound]]
+  * scopes the physical-planning settings of the ones that stay SQL.
   */
 object Rounds {
 
@@ -67,20 +35,131 @@ object Rounds {
     if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
   }
 
+  /** Rows per task of a [[pinned]] loop: the per-round fold does a
+    * handful of flops per row, so below ~2¹⁸ rows a task is pure
+    * scheduling overhead.
+    */
+  private val RowsPerTask = 1L << 18
+
   /** Partition count for an RDD-native round loop, derived from the
     * loop's OWN row count (guide §2: scale-adaptive, never a constant
-    * tuned to one box): the per-round fold does a handful of flops per
-    * row, so below ~2¹⁸ rows a task is pure scheduling overhead —
-    * clamp to [1, defaultParallelism]. Callers repartition UP to this
-    * when their scan came in narrower (the single-row-group fixture
-    * shape) and leave wider inputs alone.
+    * tuned to one box): ⌈rows / [[RowsPerTask]]⌉ clamped to
+    * [1, defaultParallelism]. A blanket widen-to-defaultParallelism
+    * measured WORSE on the trainers — at sf0.1 the rounds were 32
+    * scheduling-overhead tasks over 5000 rows.
     */
-  def sizedParts(spark: SparkSession, rows: Long,
-      targetRowsPerTask: Long = 1L << 18): Int =
-    math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      (rows + targetRowsPerTask - 1) / targetRowsPerTask)).toInt
+  def sizedParts(sc: SparkContext, rows: Long): Int =
+    math.max(1L, math.min(sc.defaultParallelism.toLong,
+      (rows + RowsPerTask - 1) / RowsPerTask)).toInt
 
+  /** RDD-NATIVE ROUNDS for a driver-bound iterative loop (the Newton
+    * trainers, histogram boosting): `body` runs its rounds as
+    * `treeAggregate` folds over a pinned RDD of `n` rows instead of as
+    * one SQL aggregation per round.
+    *
+    * Why (round 17, profiled): the loops' cost was never compute. A
+    * bare, bit-identical 2·d·bins aggregate over an unchanged 5000-row
+    * pin still cost ~0.43 s per repetition — codegen caches after round
+    * 1, catalyst analysis/optimization of the wide sum(when) plan does
+    * not — so every SQL formulation paid ~0.4 s of driver work per
+    * round however its expressions were arranged (19 IRLS rounds made
+    * ml11 the board's #2 query on driver time). The round accumulations
+    * are trivial folds, so running them on the RDD costs zero catalyst
+    * and zero codegen per round. Callers replicate the SQL expressions'
+    * per-row float ops in order, and the per-partition accumulation +
+    * merge keeps the partial-aggregate + exchange order class: weights
+    * stay reproducible up to the documented FP-sum noise.
+    *
+    * This helper owns the pin policy: `rows` is repartitioned UP to
+    * [[sizedParts]]`(n)` when it came in narrower (a single-row-group
+    * scan) and left alone otherwise, persisted at MEMORY_AND_DISK and
+    * registered with [[Materialize]]; every RDD the loop pins —
+    * including the ones [[Pinned.advance]] creates — is unpersisted on
+    * EVERY exit path, normal return or throw.
+    */
+  def pinned[T: ClassTag, R](rows: RDD[T], n: Long)(body: Pinned[T] => R): R = {
+    val p = sizedParts(rows.sparkContext, n)
+    val loop = new Pinned(if (rows.getNumPartitions < p) rows.repartition(p) else rows)
+    try body(loop) finally loop.release()
+  }
+
+  /** The live pin of a [[pinned]] loop. */
+  final class Pinned[T: ClassTag] private[Rounds] (first: RDD[T]) {
+    private var cur: RDD[T] = pin(first)
+    // pins replaced by advance, freed once a fold has materialized cur
+    private var superseded = List.empty[RDD[T]]
+
+    private def pin(rdd: RDD[T]): RDD[T] = {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      Materialize.registerPinned(rdd)
+      rdd
+    }
+
+    /** One round: a `treeAggregate` over the current pin. */
+    def fold[U: ClassTag](zero: U)(seqOp: (U, T) => U, combOp: (U, U) => U): U = {
+      val out = cur.treeAggregate(zero)(seqOp, combOp)
+      superseded.foreach(_.unpersist(blocking = false))
+      superseded = Nil
+      out
+    }
+
+    /** Replace the pinned rows by `f` of them (boosting's residual
+      * update). The previous pin is released only after the next
+      * [[fold]] has materialized the new one, so nothing recomputes
+      * from source.
+      */
+    def advance(f: T => T): Unit = {
+      superseded ::= cur
+      cur = pin(cur.map(f))
+    }
+
+    private[Rounds] def release(): Unit =
+      (cur :: superseded).foreach(_.unpersist(blocking = false))
+  }
+
+  /** Scoped physical-planning overrides for DRIVER-BOUND iterative
+    * rounds that stay SQL (fixed-point strength updates, centroid
+    * refinement). Profiled on ml11, before its rounds moved to
+    * [[pinned]] (19 IRLS rounds over a 4838-row pinned
+    * projection, sf0.1/local[32]): 66 Spark jobs but only ~0.6 s of
+    * summed task time in ~3.6 s of wall — the cost is driver scheduling
+    * and per-round (re)planning, not compute. Two session settings feed
+    * that overhead and buy nothing for this shape:
+    *
+    *  - AQE turns every round into a multi-job query (one job per
+    *    shuffle stage plus the broadcast) and re-optimizes a plan whose
+    *    reduce side it cannot improve — the aggregate output is
+    *    O(groups · state) KILOBYTES by the caller's own contract.
+    *  - The session shuffle-partition count fans those few KB into
+    *    dozens of sub-millisecond reduce tasks per round.
+    *
+    * [[driverBound]] scopes `spark.sql.adaptive.enabled = false` plus a
+    * shuffle-partition count DERIVED from the loop's own reduce size to
+    * the loop body, and restores the prior values on every exit path.
+    * Measured on ml11: 3.13 s → 2.25 s (min-of-3 each) for the fit.
+    *
+    * This is deliberately NOT blanket config (guide §1.2: config last,
+    * and never constants tuned to one box): `reduceBytes` names the
+    * per-round aggregate output size — groups × per-group state — so the
+    * partition count scales with the problem (clamped to
+    * [1, defaultParallelism] at ~64 KiB per reduce task) and the
+    * override dies with the loop. Callers whose per-round relations are
+    * CORPUS-sized (graph rounds over edge tables) must size
+    * `reduceBytes` from the real per-round relation, not the collected
+    * state, or not use this at all. MEASURED HAZARD: do not wrap loops
+    * containing HINT-LESS joins — with AQE off their strategy falls back
+    * to the static planner, which cannot prove a pinned-RDD build side
+    * small (no statistics) and picks sort-merge; kCore under this helper
+    * went 1.5 → 8.2 s at sf0.1 before the revert. Of the wrapped loops,
+    * centroid refinement joins nothing; bradleyTerryFit's strength joins
+    * are hint-less but
+    * both sides are the SAME O(items) cardinality, so sort-merge is the
+    * right strategy with or without AQE (measured neutral). NOT
+    * thread-safe against concurrent
+    * queries on the same session (session-level conf) — the engine's
+    * batch drivers run queries serially; the streaming path never calls
+    * into these trainers.
+    */
   def driverBound[T](spark: SparkSession, reduceBytes: Long)(body: => T): T = {
     val conf = spark.conf
     val aqeBefore = conf.get("spark.sql.adaptive.enabled")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Model TRAINING over the lake — the step the ml1–ml5 eval family
@@ -67,161 +67,194 @@ object Trainer {
     * bitwise — consumers that need an exact oracle should state a
     * margin-robust property (see ml6), not weight values.
     */
-  /** The pinned (label, features…) rows of a Newton loop as a
-    * row-count-parallelized RDD — the round-17 RDD-native-rounds
-    * pattern (see boostStumps' rounds comment for the profile that
-    * motivates it: per-round catalyst analysis, not compute, dominated
-    * every SQL formulation of these driver-bound loops).
-    */
-  private def newtonRows(data: DataFrame, d: Int, n: Long)
-      : org.apache.spark.rdd.RDD[(Double, Array[Double])] = {
-    val raw = data.rdd.map(row =>
-      (row.getDouble(0), Array.tabulate(d)(i => row.getDouble(i + 1))))
-    val p = Rounds.sizedParts(data.sparkSession, n)
-    val pr = (if (raw.getNumPartitions < p) raw.repartition(p) else raw)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Materialize.registerPinned(pr)
-    pr
-  }
-
-  /** One Newton round over [[newtonRows]] output: per row, standardize
-    * (z = (x−μ)/σ), left-fold the margin ((β₀·1 + β₁·z₀) + …, the SQL
-    * expression's exact association), hand (margin, y) to `rowFn` for
-    * the loss-specific (weight, residual, extra) triple, and fold the
-    * upper-triangle Hessian (w·xa)·xb, gradient resid·xa, and Σ extra —
-    * bit-for-bit the per-row arithmetic the old SQL aggregation ran,
-    * with the same partial-per-partition + merge sum structure.
-    */
-  private def newtonAgg(rdd: org.apache.spark.rdd.RDD[(Double, Array[Double])],
-      m: Int, mu: Array[Double], sd: Array[Double], beta: Array[Double],
-      rowFn: (Double, Double) => (Double, Double, Double))
-      : (Array[Double], Array[Double], Double) = {
-    val d = m - 1
-    val nUpper = m * (m + 1) / 2
-    val betaSnap = beta.clone()
-    val zero = (new Array[Double](nUpper), new Array[Double](m),
-      new Array[Double](1))
-    val (h, g, e) = rdd.treeAggregate(zero)(
-      seqOp = { case (acc, (y, xsRaw)) =>
-        val z = new Array[Double](d)
-        var i = 0
-        while (i < d) { z(i) = (xsRaw(i) - mu(i)) / sd(i); i += 1 }
-        var mg = betaSnap(0) * 1.0
-        i = 0
-        while (i < d) { mg += betaSnap(i + 1) * z(i); i += 1 }
-        val (w, resid, extra) = rowFn(mg, y)
-        val (hA, gA, eA) = acc
-        var k = 0
-        var a = 0
-        while (a < m) {
-          val xa = if (a == 0) 1.0 else z(a - 1)
-          gA(a) += resid * xa
-          var b = a
-          while (b < m) {
-            val xb = if (b == 0) 1.0 else z(b - 1)
-            hA(k) += w * xa * xb
-            k += 1; b += 1
-          }
-          a += 1
-        }
-        eA(0) += extra
-        acc
-      },
-      combOp = { (x, yv) =>
-        var k = 0
-        while (k < x._1.length) { x._1(k) += yv._1(k); k += 1 }
-        k = 0
-        while (k < x._2.length) { x._2(k) += yv._2(k); k += 1 }
-        x._3(0) += yv._3(0)
-        x
-      })
-    (h, g, e(0))
-  }
-
   def logisticFit(df: DataFrame, featCols: Seq[String], labelCol: String,
       iters: Int = 25, l2: Double = 1e-4, tol: Double = 1e-8): LogisticModel = {
-    require(featCols.nonEmpty, "logisticFit: no feature columns")
+    // bad rows = non-0/1-or-null label OR any null feature (same check
+    // ridgeFit runs): a null feature nulls the whole row's margin, so the
+    // row would silently DROP from every Hessian / gradient / loss sum
+    // while n still counts it — biased weights and a wrong reported
+    // log-loss, or an NPE on an all-null column.
+    val (w, b, it, loss) = glmFit(df, featCols, labelCol, "logisticFit",
+      col("__y").isNull || (col("__y") =!= 0.0 && col("__y") =!= 1.0),
+      "non-null 0/1", iters, l2, tol, Double.PositiveInfinity, _ => 0.0,
+      logisticTerms)
+    LogisticModel(featCols, w, b, it, loss)
+  }
+
+  /** Per-row logistic terms, replicating the SQL expressions op for op:
+    * p = 1/(1+e^−m), weight p·(1−p), residual y − p, and the stable
+    * log-loss ln(1+e^m) − y·m with the ±30 saturation branches.
+    */
+  private val logisticTerms: (Double, Double) => (Double, Double, Double) =
+    (mg, y) => {
+      val p = 1.0 / (1.0 + math.exp(-mg))
+      val ll = (if (mg > 30) mg
+        else if (mg < -30) 0.0
+        else math.log(1.0 + math.exp(mg))) - y * mg
+      (p * (1.0 - p), y - p, ll)
+    }
+
+  /** The `(__y, __x0, __x1, …)` projection every trainer fits on. */
+  private def labelAndFeatures(labelCol: String, featCols: Seq[String]): Seq[Column] =
+    col(labelCol).cast("double").as("__y") +:
+      featCols.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__x$i") }
+
+  /** Standardization stats over a [[labelAndFeatures]] projection: n,
+    * the count of rows failing `badLabel` or carrying a null feature,
+    * and per-feature mean and population std.
+    */
+  private def standardStats(d: Int, badLabel: Column): Seq[Column] = {
+    val anyBad = (0 until d).map(i => col(s"__x$i").isNull).foldLeft(badLabel)(_ || _)
+    Seq(count(lit(1)).as("n"), sum(when(anyBad, 1).otherwise(0)).as("bad"),
+      array((0 until d).map(i => avg(col(s"__x$i"))): _*).as("mu"),
+      array((0 until d).map(i => stddev_pop(col(s"__x$i"))): _*).as("sd"))
+  }
+
+  /** Fold standardization back: β·(x−μ)/σ + b = (β/σ)·x + (b − Σ βμ/σ). */
+  private def foldBack(beta: Array[Double], mu: Array[Double],
+      sd: Array[Double]): (Array[Double], Double) = {
+    val d = mu.length
+    (Array.tabulate(d)(i => beta(i + 1) / sd(i)),
+      beta(0) - (0 until d).map(i => beta(i + 1) * mu(i) / sd(i)).sum)
+  }
+
+  /** Size of a Newton round's accumulator for m = d+1 coefficients:
+    * [Hessian upper triangle (m(m+1)/2) | gradient (m) | loss sum (1)].
+    */
+  private def newtonAccSize(m: Int): Int = m * (m + 1) / 2 + m + 1
+
+  /** The per-row Newton kernel: standardize (z = (x−μ)/σ), left-fold the
+    * margin ((β₀ + β₁·z₀) + …, the SQL expression's exact association),
+    * hand (margin, y) to `rowFn` for the loss-specific (weight,
+    * residual, loss) triple, and add the upper-triangle Hessian
+    * (w·xa)·xb, the gradient resid·xa and the loss into `acc` (layout
+    * [[newtonAccSize]]) — bit-for-bit the per-row arithmetic the old
+    * SQL aggregation ran.
+    */
+  private def newtonRow(acc: Array[Double], y: Double, xs: Array[Double],
+      mu: Array[Double], sd: Array[Double], beta: Array[Double],
+      rowFn: (Double, Double) => (Double, Double, Double)): Unit = {
+    val d = xs.length
+    val z = new Array[Double](d)
+    var i = 0
+    while (i < d) { z(i) = (xs(i) - mu(i)) / sd(i); i += 1 }
+    var mg = beta(0)
+    i = 0
+    while (i < d) { mg += beta(i + 1) * z(i); i += 1 }
+    val (w, resid, loss) = rowFn(mg, y)
+    val gAt = (d + 1) * (d + 2) / 2
+    var k = 0
+    var a = 0
+    while (a <= d) {
+      val xa = if (a == 0) 1.0 else z(a - 1)
+      acc(gAt + a) += resid * xa
+      var b = a
+      while (b <= d) {
+        val xb = if (b == 0) 1.0 else z(b - 1)
+        acc(k) += w * xa * xb
+        k += 1; b += 1
+      }
+      a += 1
+    }
+    acc(gAt + d + 1) += loss
+  }
+
+  /** `a += b` element-wise: the merge of every trainer round's fold. */
+  private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var k = 0
+    while (k < a.length) { a(k) += b(k); k += 1 }
+    a
+  }
+
+  /** One penalized Newton step on the MEAN objective from a round's
+    * accumulator over `n` rows:
+    *   (H/n + l2·I_feat) Δ = g/n − l2·β_feat    (intercept unpenalized)
+    * solved, scaled down so no coordinate moves more than `stepCap`, and
+    * added to `beta` in place. True once the max-abs penalized gradient
+    * or the max-abs step falls under `tol`.
+    */
+  private def newtonStep(acc: Array[Double], n: Long, beta: Array[Double],
+      l2: Double, tol: Double, stepCap: Double): Boolean = {
+    val m = beta.length
+    val gAt = m * (m + 1) / 2
+    val h = Array.ofDim[Double](m, m)
+    var k = 0
+    for { a <- 0 until m; b <- a until m } {
+      h(a)(b) = acc(k) / n; h(b)(a) = h(a)(b); k += 1
+    }
+    val rhs = new Array[Double](m)
+    var maxG = 0.0
+    for (a <- 0 until m) {
+      val pen = if (a == 0) 0.0 else l2
+      h(a)(a) += pen
+      rhs(a) = acc(gAt + a) / n - pen * beta(a)
+      if (math.abs(rhs(a)) > maxG) maxG = math.abs(rhs(a))
+    }
+    val delta = solve(h, rhs)
+    var rawMax = 0.0
+    for (a <- 0 until m)
+      if (math.abs(delta(a)) > rawMax) rawMax = math.abs(delta(a))
+    val scale = if (rawMax > stepCap) stepCap / rawMax else 1.0
+    var maxStep = 0.0
+    for (a <- 0 until m) {
+      val step = delta(a) * scale
+      beta(a) += step
+      if (math.abs(step) > maxStep) maxStep = math.abs(step)
+    }
+    maxG < tol || maxStep < tol
+  }
+
+  /** The shared IRLS driver of [[logisticFit]] and [[poissonFit]]: one
+    * stats pass over the pinned projection (fail-fasts named after
+    * `name`; `badLabel` flags invalid labels, `labelRule` says what a
+    * valid one is), intercept started at `beta0(ȳ)`, then [[Rounds.pinned]]
+    * Newton rounds with per-row terms from `rowFn`. Returns the raw-space
+    * (weights, bias), the rounds run and the last round's mean loss.
+    */
+  private def glmFit(df: DataFrame, featCols: Seq[String], labelCol: String,
+      name: String, badLabel: Column, labelRule: String, iters: Int,
+      l2: Double, tol: Double, stepCap: Double, beta0: Double => Double,
+      rowFn: (Double, Double) => (Double, Double, Double))
+      : (Array[Double], Double, Int, Double) = {
+    require(featCols.nonEmpty, s"$name: no feature columns")
     val d = featCols.size
-    // One narrow projection, pinned: the loop re-scans it each round.
-    val data = Materialize(df.select(
-      (col(labelCol).cast("double").as("__y")) +:
-        featCols.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__x$i") }: _*))
+    // One narrow projection, pinned: the stats pass and the round pin read it.
+    val data = Materialize(df.select(labelAndFeatures(labelCol, featCols): _*))
     try {
-      // bad rows = non-0/1-or-null label OR any null feature (same
-      // check ridgeFit runs): a null feature nulls the whole row's
-      // margin, so the row would silently DROP from every Hessian /
-      // gradient / loss sum while n still counts it — biased weights
-      // and a wrong reported log-loss, or an NPE on an all-null column.
-      val anyBad = (0 until d).map(i => col(s"__x$i").isNull)
-        .foldLeft(col("__y").isNull || (col("__y") =!= 0.0 && col("__y") =!= 1.0))(_ || _)
-      val statsRow = data.agg(
-        count(lit(1)).as("n"),
-        sum(when(anyBad, 1).otherwise(0)).as("bad"),
-        array((0 until d).map(i => avg(col(s"__x$i"))): _*).as("mu"),
-        array((0 until d).map(i => stddev_pop(col(s"__x$i"))): _*).as("sd")).collect()(0)
+      val stats = standardStats(d, badLabel) :+ avg(col("__y")).as("ybar")
+      val statsRow = data.agg(stats.head, stats.tail: _*).collect()(0)
       val n = statsRow.getLong(0)
-      require(n > 0, "logisticFit: empty input")
+      require(n > 0, s"$name: empty input")
       require(statsRow.getLong(1) == 0,
-        s"logisticFit: label column '$labelCol' must be non-null 0/1 and " +
+        s"$name: label column '$labelCol' must be $labelRule and " +
           "feature columns non-null — filter or impute first")
       val mu = statsRow.getSeq[Double](2).toArray
       val sd = statsRow.getSeq[Double](3).toArray
       val flat = featCols.zip(sd).collect { case (c, s) if s == 0.0 => c }
       require(flat.isEmpty,
-        s"logisticFit: zero-variance feature(s) ${flat.mkString(", ")} — " +
+        s"$name: zero-variance feature(s) ${flat.mkString(", ")} — " +
           "drop constants before fitting")
-
-      val m = d + 1 // beta(0) = intercept, beta(i+1) = standardized feature i
-      val beta = new Array[Double](m)
+      // beta(0) = intercept, beta(i+1) = standardized feature i
+      val beta = new Array[Double](d + 1)
+      beta(0) = beta0(statsRow.getDouble(4))
       var loss = Double.NaN
       var it = 0
       var converged = false
-      // RDD-native rounds (see [[newtonAgg]]): zero catalyst per round
-      val rdata = newtonRows(data, d, n)
-      try {
-      while (it < iters && !converged) {
-        // per-row loss terms, replicating the SQL expressions op for op:
-        // p = 1/(1+e^−m), w = p·(1−p), resid = y − p, and the stable
-        // log-loss ln(1+e^m) − y·m with the ±30 saturation branches
-        val (hFlat, gRaw, llSum) = newtonAgg(rdata, m, mu, sd, beta,
-          (mg, y) => {
-            val p = 1.0 / (1.0 + math.exp(-mg))
-            val ll = (if (mg > 30) mg
-              else if (mg < -30) 0.0
-              else math.log(1.0 + math.exp(mg))) - y * mg
-            (p * (1.0 - p), y - p, ll)
-          })
-        val g = gRaw.map(_ / n)
-        loss = llSum / n
-        // penalized Newton system on the MEAN objective:
-        //   (H/n + l2·I_feat) Δ = g − l2·β_feat    (intercept unpenalized)
-        val h = Array.ofDim[Double](m, m)
-        var k = 0
-        for { a <- 0 until m; b <- a until m } {
-          h(a)(b) = hFlat(k) / n; h(b)(a) = h(a)(b); k += 1
+      val rows = data.rdd.map(r =>
+        (r.getDouble(0), Array.tabulate(d)(i => r.getDouble(i + 1))))
+      Rounds.pinned(rows, n) { loop =>
+        while (it < iters && !converged) {
+          val b = beta.clone()
+          val sums = loop.fold(new Array[Double](newtonAccSize(d + 1)))(
+            { case (acc, (y, xs)) => newtonRow(acc, y, xs, mu, sd, b, rowFn); acc },
+            addInto)
+          loss = sums(sums.length - 1) / n
+          converged = newtonStep(sums, n, beta, l2, tol, stepCap)
+          it += 1
         }
-        val rhs = new Array[Double](m)
-        var maxG = 0.0
-        for (a <- 0 until m) {
-          val pen = if (a == 0) 0.0 else l2
-          h(a)(a) += pen
-          rhs(a) = g(a) - pen * beta(a)
-          if (math.abs(rhs(a)) > maxG) maxG = math.abs(rhs(a))
-        }
-        val delta = solve(h, rhs)
-        var maxStep = 0.0
-        for (a <- 0 until m) {
-          beta(a) += delta(a)
-          if (math.abs(delta(a)) > maxStep) maxStep = math.abs(delta(a))
-        }
-        it += 1
-        converged = maxG < tol || maxStep < tol
       }
-      } finally rdata.unpersist(blocking = false)
-      // Fold standardization back: β·(x−μ)/σ + b = (β/σ)·x + (b − Σ βμ/σ)
-      val rawW = Array.tabulate(d)(i => beta(i + 1) / sd(i))
-      val rawB = beta(0) - (0 until d).map(i => beta(i + 1) * mu(i) / sd(i)).sum
-      LogisticModel(featCols, rawW, rawB, it, loss)
+      val (w, bias) = foldBack(beta, mu, sd)
+      (w, bias, it, loss)
     } finally Materialize.releaseSuperseded(data)
   }
 
@@ -247,28 +280,47 @@ object Trainer {
   def ridgeFit(df: DataFrame, featCols: Seq[String], labelCol: String,
       l2: Double = 1e-9): LinearModel = {
     require(featCols.nonEmpty, "ridgeFit: no feature columns")
-    val d = featCols.size
+    val moments = momentAggs(featCols.size)
+    val row = df.select(labelAndFeatures(labelCol, featCols): _*)
+      .agg(moments.head, moments.tail: _*).collect()(0)
+    val n = row.getLong(0)
+    require(n > 0, "ridgeFit: empty input")
+    require(row.getLong(1) == 0,
+      s"ridgeFit: null feature/label values — filter or impute first")
+    val (w, bias) = ridgeSolve(row, 0, featCols, l2)(flat =>
+      s"ridgeFit: zero-variance feature(s) $flat — drop constants before fitting")
+    LinearModel(featCols, w, bias, n)
+  }
+
+  /** Ridge moment aggregation over a [[labelAndFeatures]] projection:
+    * n, the null-row count, and the raw moments Σxₐx_b (upper
+    * triangle), Σxₐy, Σxₐ and Σy.
+    */
+  private def momentAggs(d: Int): Seq[Column] = {
     val x = Array.tabulate(d)(i => col(s"__x$i"))
-    val data = df.select(
-      (col(labelCol).cast("double").as("__y")) +:
-        featCols.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__x$i") }: _*)
     val upper = for { a <- 0 until d; b <- a until d } yield (a, b)
-    val row = data.agg(
-      count(lit(1)).as("n"),
+    Seq(count(lit(1)).as("n"),
       sum(when(x.map(_.isNull).foldLeft(col("__y").isNull)(_ || _), 1)
         .otherwise(0)).as("bad"),
       array(upper.map { case (a, b) => sum(x(a) * x(b)) }: _*).as("xx"),
       array((0 until d).map(a => sum(x(a) * col("__y"))): _*).as("xy"),
       array((0 until d).map(a => sum(x(a))): _*).as("sx"),
-      sum(col("__y")).as("sy")).collect()(0)
-    val n = row.getLong(0)
-    require(n > 0, "ridgeFit: empty input")
-    require(row.getLong(1) == 0,
-      s"ridgeFit: null feature/label values — filter or impute first")
-    val xx = row.getSeq[Double](2).toArray
-    val xy = row.getSeq[Double](3).toArray
-    val mu = row.getSeq[Double](4).toArray.map(_ / n)
-    val ybar = row.getDouble(5) / n
+      sum(col("__y")).as("sy"))
+  }
+
+  /** The centered ridge solve from one [[momentAggs]] row whose `n`
+    * column sits at `at`: Cov = Σxx/n − μμᵀ, (Cov + l2·I)w = cov(x,y),
+    * b = ȳ − w·μ. Zero-variance features fail fast with
+    * `flatMsg(names)`. Returns (w, b).
+    */
+  private def ridgeSolve(r: Row, at: Int, featCols: Seq[String], l2: Double)(
+      flatMsg: String => String): (Array[Double], Double) = {
+    val d = featCols.size
+    val n = r.getLong(at)
+    val xx = r.getSeq[Double](at + 2).toArray
+    val xy = r.getSeq[Double](at + 3).toArray
+    val mu = r.getSeq[Double](at + 4).toArray.map(_ / n)
+    val ybar = r.getDouble(at + 5) / n
     // centered second moments: cov(a,b) = Σxaxb/n − μaμb
     val h = Array.ofDim[Double](d, d)
     var k = 0
@@ -276,13 +328,11 @@ object Trainer {
       h(a)(b) = xx(k) / n - mu(a) * mu(b); h(b)(a) = h(a)(b); k += 1
     }
     val flat = (0 until d).collect { case a if h(a)(a) <= 0.0 => featCols(a) }
-    require(flat.isEmpty,
-      s"ridgeFit: zero-variance feature(s) ${flat.mkString(", ")} — " +
-        "drop constants before fitting")
+    require(flat.isEmpty, flatMsg(flat.mkString(", ")))
     val rhs = Array.tabulate(d)(a => xy(a) / n - mu(a) * ybar)
     for (a <- 0 until d) h(a)(a) += l2
     val w = solve(h, rhs)
-    LinearModel(featCols, w, ybar - (0 until d).map(a => w(a) * mu(a)).sum, n)
+    (w, ybar - (0 until d).map(a => w(a) * mu(a)).sum)
   }
 
   /** Map-only prediction column: bias + w·x over raw feature columns. */
@@ -420,7 +470,7 @@ object Trainer {
         val sorted = knotRows.sortBy(_.getDouble(1))
         val (num, den) = pavPool(sorted.map(r => (r.getLong(3), r.getLong(2))))
         sorted.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row(g, r.getDouble(1), r.getLong(2),
+          Row(g, r.getDouble(1), r.getLong(2),
             (BigInt(num(i)) * 1000000000L / BigInt(den(i))).toLong)
         }
       }
@@ -458,7 +508,7 @@ object Trainer {
     val spark = df.sparkSession
     val cal = model.calibratedX1e9
     val rows = model.knots.indices.map { i =>
-      org.apache.spark.sql.Row(
+      Row(
         if (i == 0) Double.NegativeInfinity else model.knots(i),
         if (i + 1 < model.knots.length) model.knots(i + 1)
         else Double.PositiveInfinity,
@@ -506,20 +556,9 @@ object Trainer {
       maxGroups: Int = 100000): DataFrame = {
     require(featCols.nonEmpty, "ridgeFitPerGroup: no feature columns")
     val spark = df.sparkSession
-    val d = featCols.size
-    val x = Array.tabulate(d)(i => col(s"__x$i"))
-    val data = df.select(
-      col(groupCol).as("__g") +: col(labelCol).cast("double").as("__y") +:
-        featCols.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__x$i") }: _*)
-    val upper = for { a <- 0 until d; b <- a until d } yield (a, b)
-    val rows = data.groupBy("__g").agg(
-      count(lit(1)).as("n"),
-      sum(when(x.map(_.isNull).foldLeft(col("__y").isNull)(_ || _), 1)
-        .otherwise(0)).as("bad"),
-      array(upper.map { case (a, b) => sum(x(a) * x(b)) }: _*).as("xx"),
-      array((0 until d).map(a => sum(x(a) * col("__y"))): _*).as("xy"),
-      array((0 until d).map(a => sum(x(a))): _*).as("sx"),
-      sum(col("__y")).as("sy"))
+    val data = df.select(col(groupCol).as("__g") +: labelAndFeatures(labelCol, featCols): _*)
+    val moments = momentAggs(featCols.size)
+    val rows = data.groupBy("__g").agg(moments.head, moments.tail: _*)
       .limit(maxGroups + 1)
       .collect()
     require(rows.nonEmpty, "ridgeFitPerGroup: empty input")
@@ -536,25 +575,10 @@ object Trainer {
       s"ridgeFitPerGroup: null feature/label values in group(s) " +
         s"${badGroups.mkString(", ")} — filter or impute first")
     val modelRows = rows.map { r =>
-      val n = r.getLong(1)
-      val xx = r.getSeq[Double](3).toArray
-      val xy = r.getSeq[Double](4).toArray
-      val mu = r.getSeq[Double](5).toArray.map(_ / n)
-      val ybar = r.getDouble(6) / n
-      val h = Array.ofDim[Double](d, d)
-      var k = 0
-      for { a <- 0 until d; b <- a until d } {
-        h(a)(b) = xx(k) / n - mu(a) * mu(b); h(b)(a) = h(a)(b); k += 1
-      }
-      val flat = (0 until d).collect { case a if h(a)(a) <= 0.0 => featCols(a) }
-      require(flat.isEmpty,
-        s"ridgeFitPerGroup: zero-variance feature(s) ${flat.mkString(", ")} " +
-          s"in group ${r.get(0)} — drop constants (or that group) before fitting")
-      val rhs = Array.tabulate(d)(a => xy(a) / n - mu(a) * ybar)
-      for (a <- 0 until d) h(a)(a) += l2
-      val w = solve(h, rhs)
-      val bias = ybar - (0 until d).map(a => w(a) * mu(a)).sum
-      org.apache.spark.sql.Row(r.get(0), n, bias, w.toSeq)
+      val (w, bias) = ridgeSolve(r, 1, featCols, l2)(flat =>
+        s"ridgeFitPerGroup: zero-variance feature(s) $flat in group " +
+          s"${r.get(0)} — drop constants (or that group) before fitting")
+      Row(r.get(0), r.getLong(1), bias, w.toSeq)
     }.toSeq
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField(groupCol, data.schema("__g").dataType),
@@ -572,16 +596,17 @@ object Trainer {
 
   /** "Many models", logistic edition: an independent IRLS logistic
     * regression PER GROUP — the per-source / per-language quality-filter
-    * trainer — with every round still ONE distributed aggregation for
-    * ALL unconverged groups at once. Per round: the driver's per-group
+    * trainer — with every round still ONE distributed pass for ALL
+    * unconverged groups at once. Per round: the driver's per-group
     * state (standardization μ/σ and current β, O(d) doubles each) ships
-    * back as a broadcast join table; each row computes its own group's
-    * margin/weight/residual from the joined columns; a groupBy
-    * aggregates every group's Hessian triangle + gradient + loss in the
-    * same shuffle; the driver solves each group's tiny Newton system.
-    * Groups that converge LEAVE the join table, so their rows drop out
-    * of later rounds at the broadcast join — the pass cost shrinks as
-    * the easy groups finish. Total: 1 stats pass + (max rounds) passes,
+    * as a broadcast map keyed by the group value; one [[Rounds.pinned]]
+    * fold over the pinned (group, label, features) rows looks each
+    * row's group up in it and accumulates that group's Hessian triangle
+    * and gradient into a per-group accumulator (merged per key across
+    * partitions); the driver solves each group's tiny Newton system.
+    * Groups that converge LEAVE the broadcast map, so their rows skip
+    * the accumulation in later rounds — the work shrinks as the easy
+    * groups finish. Total: 1 stats pass + (max rounds) folds,
     * regardless of group count; driver state O(groups·d²) behind the
     * explicit `maxGroups` fail-fast.
     *
@@ -613,16 +638,11 @@ object Trainer {
     val d = featCols.size
     val m = d + 1
     val data = Materialize(df.select(
-      col(groupCol).as("__g") +: col(labelCol).cast("double").as("__y") +:
-        featCols.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__x$i") }: _*))
+      col(groupCol).as("__g") +: labelAndFeatures(labelCol, featCols): _*))
     try {
-      val anyBad = (0 until d).map(i => col(s"__x$i").isNull)
-        .foldLeft(col("__y").isNull || (col("__y") =!= 0.0 && col("__y") =!= 1.0))(_ || _)
-      val stats = data.groupBy("__g").agg(
-        count(lit(1)).as("n"),
-        sum(when(anyBad, 1).otherwise(0)).as("bad"),
-        array((0 until d).map(i => avg(col(s"__x$i"))): _*).as("mu"),
-        array((0 until d).map(i => stddev_pop(col(s"__x$i"))): _*).as("sd"))
+      val statCols = standardStats(d,
+        col("__y").isNull || (col("__y") =!= 0.0 && col("__y") =!= 1.0))
+      val stats = data.groupBy("__g").agg(statCols.head, statCols.tail: _*)
         .limit(maxGroups + 1)
         .collect()
       require(stats.nonEmpty, "logisticFitPerGroup: empty input")
@@ -655,123 +675,46 @@ object Trainer {
       var active = state
       val gType = data.schema("__g").dataType
       var it = 0
-      // RDD-NATIVE ROUNDS (round-17, same finding as boostStumps): the
-      // old per-round broadcast-join + m(m+1)/2-term grouped SQL agg
-      // paid ~0.4 s of catalyst analysis/planning per round regardless
-      // of expression arrangement (codegen caches; analysis does not) —
-      // 19 IRLS rounds made ml11 the board's #2 query on DRIVER time.
-      // The Newton accumulations are trivial folds, so the rounds run
-      // over the pinned (key, y, x…) RDD with a broadcast param map:
-      // zero catalyst per round. Per-row float ops replicate the SQL
-      // expressions' exact order (z = (x−μ)/σ; margin left-fold;
-      // (w·xa)·xb), and partial-sum/merge order is the partial-agg +
-      // exchange order class the operator already had — the documented
-      // FP-sum-noise tolerance, oracle-pinned at both SFs.
-      val rdata: org.apache.spark.rdd.RDD[(Any, Double, Array[Double])] = {
-        val dd = d
-        val raw = data.rdd.map { row =>
-          (row.get(0), row.getDouble(1),
-            Array.tabulate(dd)(i => row.getDouble(i + 2)))
-        }
-        // row-count-derived round parallelism — see boostStumps
-        val p = Rounds.sizedParts(spark, stats.map(_.getLong(1)).sum)
-        (if (raw.getNumPartitions < p) raw.repartition(p) else raw)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-      Materialize.registerPinned(rdata)
-      try {
-      while (it < iters && active.nonEmpty) {
-        // broadcast map: group key → (μ, σ, β); converged groups are
-        // absent, so their rows drop out here and later rounds shrink
-        val bc = spark.sparkContext.broadcast(
-          active.map(g => g.key -> ((g.mu, g.sd, g.beta))).toMap)
-        val mm = m; val dd = d; val nUpper = m * (m + 1) / 2
-        type AccMap = scala.collection.mutable.HashMap[Any, (Array[Double], Array[Double])]
-        val agg = rdata.treeAggregate(new AccMap)(
-          seqOp = { case (acc, (key, y, xs)) =>
-            bc.value.get(key) match {
-              case Some((mu, sd, beta)) =>
-                val z = new Array[Double](dd)
-                var i = 0
-                while (i < dd) { z(i) = (xs(i) - mu(i)) / sd(i); i += 1 }
-                // margin left-fold: ((b0 + b1·z0) + b2·z1)… — the SQL
-                // expression's exact association
-                var mg = beta(0)
-                i = 0
-                while (i < dd) { mg += beta(i + 1) * z(i); i += 1 }
-                val p = 1.0 / (1.0 + math.exp(-mg))
-                val w = p * (1.0 - p)
-                val resid = y - p
-                val (h, gr) = acc.getOrElseUpdate(key,
-                  (new Array[Double](nUpper), new Array[Double](mm)))
-                var k = 0
-                var a = 0
-                while (a < mm) {
-                  val xa = if (a == 0) 1.0 else z(a - 1)
-                  gr(a) += resid * xa
-                  var b = a
-                  while (b < mm) {
-                    val xb = if (b == 0) 1.0 else z(b - 1)
-                    h(k) += w * xa * xb
-                    k += 1; b += 1
-                  }
-                  a += 1
-                }
-              case None => ()
-            }
-            acc
-          },
-          combOp = { (x, yv) =>
-            yv.foreach { case (key, (h2, g2)) =>
-              x.get(key) match {
-                case Some((h1, g1)) =>
-                  var k = 0
-                  while (k < h1.length) { h1(k) += h2(k); k += 1 }
-                  k = 0
-                  while (k < g1.length) { g1(k) += g2(k); k += 1 }
-                case None => x.put(key, (h2, g2))
+      val rows = data.rdd.map(r =>
+        (r.get(0), r.getDouble(1), Array.tabulate(d)(i => r.getDouble(i + 2))))
+      val size = newtonAccSize(m)
+      val rowFn = logisticTerms // its loss sum is unused here
+      Rounds.pinned(rows, stats.map(_.getLong(1)).sum) { loop =>
+        while (it < iters && active.nonEmpty) {
+          // broadcast map: group key → (μ, σ, β); converged groups are
+          // absent, so their rows drop out here and later rounds shrink
+          val bc = spark.sparkContext.broadcast(
+            active.map(g => g.key -> ((g.mu, g.sd, g.beta))).toMap)
+          val sums = loop.fold(scala.collection.mutable.HashMap.empty[Any, Array[Double]])(
+            { case (acc, (key, y, xs)) =>
+              bc.value.get(key).foreach { case (mu, sd, beta) =>
+                newtonRow(acc.getOrElseUpdate(key, new Array[Double](size)),
+                  y, xs, mu, sd, beta, rowFn)
               }
-            }
-            x
-          })
-        bc.destroy()
-        val still = scala.collection.mutable.ArrayBuffer.empty[G]
-        for (g <- active) {
-          val (hFlat, gradRaw) = agg(g.key)
-          val grad = gradRaw.map(_ / g.n)
-          val h = Array.ofDim[Double](m, m)
-          var k = 0
-          for { a <- 0 until m; b <- a until m } {
-            h(a)(b) = hFlat(k) / g.n; h(b)(a) = h(a)(b); k += 1
+              acc
+            },
+            { (x, yv) =>
+              yv.foreach { case (key, a) =>
+                x.get(key) match {
+                  case Some(b) => addInto(b, a)
+                  case None => x.put(key, a)
+                }
+              }
+              x
+            })
+          bc.destroy()
+          for (g <- active) {
+            g.itersRun += 1
+            g.converged = newtonStep(sums(g.key), g.n, g.beta, l2, tol,
+              Double.PositiveInfinity)
           }
-          val rhs = new Array[Double](m)
-          var maxG = 0.0
-          for (a <- 0 until m) {
-            val pen = if (a == 0) 0.0 else l2
-            h(a)(a) += pen
-            rhs(a) = grad(a) - pen * g.beta(a)
-            if (math.abs(rhs(a)) > maxG) maxG = math.abs(rhs(a))
-          }
-          val delta = solve(h, rhs)
-          var maxStep = 0.0
-          for (a <- 0 until m) {
-            g.beta(a) += delta(a)
-            if (math.abs(delta(a)) > maxStep) maxStep = math.abs(delta(a))
-          }
-          g.itersRun += 1
-          if (maxG < tol || maxStep < tol) g.converged = true
-          else still += g
+          active = active.filterNot(_.converged)
+          it += 1
         }
-        active = still.toSeq
-        it += 1
       }
-      } finally rdata.unpersist(blocking = false)
-      // fold standardization back per group; emit the model table
       val modelRows = state.map { g =>
-        val rawW = Array.tabulate(d)(i => g.beta(i + 1) / g.sd(i))
-        val rawB = g.beta(0) -
-          (0 until d).map(i => g.beta(i + 1) * g.mu(i) / g.sd(i)).sum
-        org.apache.spark.sql.Row(g.key, g.n, g.itersRun, g.converged, rawB, rawW.toSeq)
+        val (rawW, rawB) = foldBack(g.beta, g.mu, g.sd)
+        Row(g.key, g.n, g.itersRun, g.converged, rawB, rawW.toSeq)
       }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(groupCol, gType),
@@ -848,7 +791,7 @@ object Trainer {
         val r = test.agg(
           max(abs(linearScore(model) - col(labelCol).cast("double"))).as("err"))
           .collect()(0)
-        org.apache.spark.sql.Row(f.toLong, foldN(f.toLong), r.getDouble(0))
+        Row(f.toLong, foldN(f.toLong), r.getDouble(0))
       }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("fold",
@@ -959,97 +902,30 @@ object Trainer {
     */
   def poissonFit(df: DataFrame, featCols: Seq[String], labelCol: String,
       iters: Int = 25, l2: Double = 1e-10, tol: Double = 1e-9): PoissonModel = {
-    require(featCols.nonEmpty, "poissonFit: no feature columns")
-    val d = featCols.size
-    val data = Materialize(df.select(
-      (col(labelCol).cast("double").as("__y")) +:
-        featCols.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__x$i") }: _*))
-    try {
-      val anyBad = (0 until d).map(i => col(s"__x$i").isNull)
-        .foldLeft(col("__y").isNull || col("__y") < 0.0)(_ || _)
-      val statsRow = data.agg(
-        count(lit(1)).as("n"),
-        sum(when(anyBad, 1).otherwise(0)).as("bad"),
-        array((0 until d).map(i => avg(col(s"__x$i"))): _*).as("mu"),
-        array((0 until d).map(i => stddev_pop(col(s"__x$i"))): _*).as("sd"),
-        avg(col("__y")).as("ybar")).collect()(0)
-      val n = statsRow.getLong(0)
-      require(n > 0, "poissonFit: empty input")
-      require(statsRow.getLong(1) == 0,
-        s"poissonFit: label column '$labelCol' must be non-null and >= 0 " +
-          "and feature columns non-null — filter or impute first")
-      val mu = statsRow.getSeq[Double](2).toArray
-      val sd = statsRow.getSeq[Double](3).toArray
-      val flat = featCols.zip(sd).collect { case (c, s) if s == 0.0 => c }
-      require(flat.isEmpty,
-        s"poissonFit: zero-variance feature(s) ${flat.mkString(", ")} — " +
-          "drop constants before fitting")
-
-      val m = d + 1
-      val beta = new Array[Double](m)
-      // null-model start (the standard GLM init): intercept = log(ȳ) puts
-      // the first μ at the label's own scale — from β = 0 the first
-      // Newton step on wide-range counts overshoots into the exp clamp
-      // and oscillates instead of converging (observed, caught by ml12's
-      // honesty assert at sf0.001)
-      beta(0) = math.log(math.max(statsRow.getDouble(4), 1e-12))
-      var dev = Double.NaN
-      var it = 0
-      var converged = false
-      // RDD-native rounds (see [[newtonAgg]]): zero catalyst per round
-      val rdata = newtonRows(data, d, n)
-      try {
-      while (it < iters && !converged) {
-        // per-row terms, replicating the SQL expressions op for op:
-        // μ̂ = e^min(η,30), resid = y − μ̂, and the unit deviance
-        // 2·(y·(ln y − min(η,30)) − resid), y = 0 term → 2μ̂
-        val (hFlat, gRaw, devSum) = newtonAgg(rdata, m, mu, sd, beta,
-          (eta, y) => {
-            val etaC = if (eta < 30.0) eta else 30.0
-            val muHat = math.exp(etaC)
-            val resid = y - muHat
-            val devRow = (if (y > 0) y * (math.log(y) - etaC) - resid
-              else muHat) * 2.0
-            (muHat, resid, devRow)
-          })
-        val g = gRaw.map(_ / n)
-        dev = devSum / n
-        val h = Array.ofDim[Double](m, m)
-        var k = 0
-        for { a <- 0 until m; b <- a until m } {
-          h(a)(b) = hFlat(k) / n; h(b)(a) = h(a)(b); k += 1
-        }
-        val rhs = new Array[Double](m)
-        var maxG = 0.0
-        for (a <- 0 until m) {
-          val pen = if (a == 0) 0.0 else l2
-          h(a)(a) += pen
-          rhs(a) = g(a) - pen * beta(a)
-          if (math.abs(rhs(a)) > maxG) maxG = math.abs(rhs(a))
-        }
-        val delta = solve(h, rhs)
-        // damped Newton: cap the standardized step at 2 per coordinate —
-        // the log link amplifies an overshoot exponentially, and a
-        // too-eager early step otherwise bounces off the exp clamp; near
-        // the optimum steps are tiny so damping never activates there
-        var rawMax = 0.0
-        for (a <- 0 until m)
-          if (math.abs(delta(a)) > rawMax) rawMax = math.abs(delta(a))
-        val scale = if (rawMax > 2.0) 2.0 / rawMax else 1.0
-        var maxStep = 0.0
-        for (a <- 0 until m) {
-          val step = delta(a) * scale
-          beta(a) += step
-          if (math.abs(step) > maxStep) maxStep = math.abs(step)
-        }
-        it += 1
-        converged = maxG < tol || maxStep < tol
-      }
-      } finally rdata.unpersist(blocking = false)
-      val rawW = Array.tabulate(d)(i => beta(i + 1) / sd(i))
-      val rawB = beta(0) - (0 until d).map(i => beta(i + 1) * mu(i) / sd(i)).sum
-      PoissonModel(featCols, rawW, rawB, it, dev)
-    } finally Materialize.releaseSuperseded(data)
+    // null-model start (the standard GLM init): intercept = log(ȳ) puts
+    // the first μ at the label's own scale — from β = 0 the first Newton
+    // step on wide-range counts overshoots into the exp clamp and
+    // oscillates instead of converging (observed, caught by ml12's
+    // honesty assert at sf0.001). Damped Newton: the standardized step is
+    // capped at 2 per coordinate — the log link amplifies an overshoot
+    // exponentially, and a too-eager early step otherwise bounces off the
+    // exp clamp; near the optimum steps are tiny so damping never
+    // activates there.
+    val (w, b, it, dev) = glmFit(df, featCols, labelCol, "poissonFit",
+      col("__y").isNull || col("__y") < 0.0, "non-null and >= 0", iters, l2,
+      tol, 2.0, ybar => math.log(math.max(ybar, 1e-12)),
+      // per-row terms, replicating the SQL expressions op for op:
+      // μ̂ = e^min(η,30), resid = y − μ̂, and the unit deviance
+      // 2·(y·(ln y − min(η,30)) − resid), y = 0 term → 2μ̂
+      (eta, y) => {
+        val etaC = if (eta < 30.0) eta else 30.0
+        val muHat = math.exp(etaC)
+        val resid = y - muHat
+        val devRow = (if (y > 0) y * (math.log(y) - etaC) - resid
+          else muHat) * 2.0
+        (muHat, resid, devRow)
+      })
+    PoissonModel(featCols, w, b, it, dev)
   }
 
   /** Map-only expected-count column: exp(bias + w·x) over raw feature
@@ -1131,107 +1007,63 @@ object Trainer {
     // no pin for the raw projection: it is scanned exactly twice (the
     // stats pass and the binned pin below) — checkpointing a
     // corpus-sized frame to save ONE re-scan is a net loss at scale
-    val data = df.select(
-      (col(labelCol).cast("double").as("__y")) +:
-        featCols.zipWithIndex.map { case (c, i) => col(c).cast("double").as(s"__x$i") }: _*)
-    locally {
-      val anyBad = (0 until d).map(i => col(s"__x$i").isNull)
-        .foldLeft(col("__y").isNull)(_ || _)
-      val stats = data.agg(
-        count(lit(1)).as("n"),
-        sum(when(anyBad, 1).otherwise(0)).as("bad"),
-        array((0 until d).map(i => min(col(s"__x$i"))): _*).as("lo"),
-        array((0 until d).map(i => max(col(s"__x$i"))): _*).as("hi"),
-        avg(col("__y")).as("ybar")).collect()(0)
-      val n = stats.getLong(0)
-      require(n > 0, "boostStumps: empty input")
-      require(stats.getLong(1) == 0,
-        s"boostStumps: label column '$labelCol' and features must be " +
-          "non-null — filter or impute first")
-      val lo = stats.getSeq[Double](2).toArray
-      val hi = stats.getSeq[Double](3).toArray
-      val flat = (0 until d).collect { case i if hi(i) == lo(i) => featCols(i) }
-      require(flat.isEmpty,
-        s"boostStumps: zero-variance feature(s) ${flat.mkString(", ")} — " +
-          "drop constants before fitting")
-      val base = stats.getDouble(4)
-      val widths = Array.tabulate(d)(i => (hi(i) - lo(i)) / bins)
-      // RDD-NATIVE ROUNDS (round-17 rewrite, profiled): the loop's cost
-      // was never compute — a bare, bit-identical 2·d·bins aggregate
-      // over an unchanged 5000-row pin still cost ~0.43 s per
-      // repetition (codegen CACHES after round 1; catalyst
-      // analysis/optimization of the 128-term sum(when) plan does not),
-      // so every SQL formulation pays ~0.4 s of driver work per round
-      // no matter how the expressions are arranged. The histogram
-      // aggregation is a trivial fold — per row: d array increments —
-      // so the rounds run on the materialized (residual, bins) RDD
-      // directly: zero catalyst, zero codegen, per-row work O(d)
-      // instead of O(d·bins) predicate evals, and the residual lives in
-      // DATA (each round maps one subtract and re-persists; the old
-      // growing y − (base + Σ deltas) expression made round k's per-row
-      // work O(k), O(rounds²·n) total). FP note: the per-partition
-      // accumulation order equals the old partial-aggregate's row
-      // order; partial-merge order is task-arrival like the old
-      // exchange — the documented "reproducible up to FP-sum noise"
-      // contract, spec-pinned on exact-dyadic fixtures.
-      val binned = data.select(
-        ((col("__y") - lit(base)).as("__r") +: (0 until d).map(i =>
-          least(floor((col(s"__x$i") - lit(lo(i))) / lit(widths(i))),
-            lit(bins - 1)).cast("int").as(s"__b$i"))): _*)
-      var cur: org.apache.spark.rdd.RDD[(Double, Array[Int])] = {
-        val dd = d
-        val raw = binned.rdd.map { row =>
-          (row.getDouble(0), Array.tabulate(dd)(i => row.getInt(i + 1)))
-        }
-        // row-count-derived round parallelism (Rounds.sizedParts): a
-        // blanket widen-to-defaultParallelism measured WORSE here — at
-        // sf0.1 the rounds are 32 scheduling-overhead tasks over 5000
-        // rows; a single-row-group scan still widens once n warrants it
-        val p = Rounds.sizedParts(df.sparkSession, n)
-        (if (raw.getNumPartitions < p) raw.repartition(p) else raw)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-      Materialize.registerPinned(cur)
-      try {
+    val data = df.select(labelAndFeatures(labelCol, featCols): _*)
+    val anyBad = (0 until d).map(i => col(s"__x$i").isNull)
+      .foldLeft(col("__y").isNull)(_ || _)
+    val stats = data.agg(
+      count(lit(1)).as("n"),
+      sum(when(anyBad, 1).otherwise(0)).as("bad"),
+      array((0 until d).map(i => min(col(s"__x$i"))): _*).as("lo"),
+      array((0 until d).map(i => max(col(s"__x$i"))): _*).as("hi"),
+      avg(col("__y")).as("ybar")).collect()(0)
+    val n = stats.getLong(0)
+    require(n > 0, "boostStumps: empty input")
+    require(stats.getLong(1) == 0,
+      s"boostStumps: label column '$labelCol' and features must be " +
+        "non-null — filter or impute first")
+    val lo = stats.getSeq[Double](2).toArray
+    val hi = stats.getSeq[Double](3).toArray
+    val flat = (0 until d).collect { case i if hi(i) == lo(i) => featCols(i) }
+    require(flat.isEmpty,
+      s"boostStumps: zero-variance feature(s) ${flat.mkString(", ")} — " +
+        "drop constants before fitting")
+    val base = stats.getDouble(4)
+    val widths = Array.tabulate(d)(i => (hi(i) - lo(i)) / bins)
+    // Rounds.pinned folds over the (residual, bins) rows: per row, d
+    // histogram increments instead of d·bins predicate evals, and the
+    // residual lives in DATA — each round maps one subtract (the old
+    // growing y − (base + Σ deltas) expression made round k's per-row
+    // work O(k), O(rounds²·n) total)
+    val binned = data.select(
+      ((col("__y") - lit(base)).as("__r") +: (0 until d).map(i =>
+        least(floor((col(s"__x$i") - lit(lo(i))) / lit(widths(i))),
+          lit(bins - 1)).cast("int").as(s"__b$i"))): _*)
+    val rows = binned.rdd.map(row =>
+      (row.getDouble(0), Array.tabulate(d)(i => row.getInt(i + 1))))
+    Rounds.pinned(rows, n) { loop =>
       // per-bin counts never change — they ride ALONG round 1's
-      // aggregation instead of paying their own pass
+      // aggregation instead of paying their own pass, as doubles after
+      // the d·bins residual sums (exact integers below 2⁵³ rows)
       var cnt: Array[Array[Long]] = null
-
       val stumps = scala.collection.mutable.ArrayBuffer.empty[Stump]
-      var pendingRelease: Option[org.apache.spark.rdd.RDD[_]] = None
       var r = 0
       var done = false
       while (r < rounds && !done) {
-        val nBins = bins; val dd = d; val withCnt = cnt == null
-        val zero = (new Array[Double](d * bins),
-          if (withCnt) new Array[Long](d * bins) else null)
-        val (rsArr, csArr) = cur.treeAggregate(zero)(
-          seqOp = { case (acc, (res, bs)) =>
+        val dB = d * bins; val withCnt = cnt == null
+        val rs = loop.fold(new Array[Double](if (withCnt) 2 * dB else dB))(
+          { case (acc, (res, bs)) =>
             var i = 0
-            while (i < dd) {
-              val k = i * nBins + bs(i)
-              acc._1(k) += res
-              if (withCnt) acc._2(k) += 1L
+            while (i < d) {
+              val k = i * bins + bs(i)
+              acc(k) += res
+              if (withCnt) acc(dB + k) += 1.0
               i += 1
             }
             acc
           },
-          combOp = { case (a, b) =>
-            var k = 0
-            while (k < a._1.length) {
-              a._1(k) += b._1(k)
-              if (withCnt) a._2(k) += b._2(k)
-              k += 1
-            }
-            a
-          })
-        // the aggregate materialized cur's persist — the previous
-        // round's blocks are now safe to drop
-        pendingRelease.foreach(_.unpersist(blocking = false))
-        pendingRelease = None
+          addInto)
         if (withCnt)
-          cnt = Array.tabulate(d, bins)((i, b) => csArr(i * bins + b))
-        val rs: IndexedSeq[Double] = rsArr
+          cnt = Array.tabulate(d, bins)((i, b) => rs(dB + i * bins + b).toLong)
         // driver sweep: best (gain, feature, splitBin), deterministic order
         var bestGain = 0.0
         var bestF = -1
@@ -1266,24 +1098,15 @@ object Trainer {
           val thr = lo(bestF) + widths(bestF) * (bestB + 1)
           stumps += Stump(bestF, bestB, thr, bestL, bestR)
           r += 1
-          // fold the new stump's delta into the residual DATA (see the
-          // rounds comment above) — skipped when no further round will
-          // read it (last round). The previous round's blocks are
-          // released only AFTER the next aggregate materializes this
-          // map (pendingRelease), so nothing recomputes from source.
+          // fold the new stump's delta into the residual DATA — skipped
+          // when no further round will read it (last round)
           if (r < rounds) {
-            val prev = cur
             val (f, b, l, rv) = (bestF, bestB, bestL, bestR)
-            cur = prev.map { case (res, bs) =>
-              (res - (if (bs(f) <= b) l else rv), bs)
-            }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            Materialize.registerPinned(cur)
-            pendingRelease = Some(prev)
+            loop.advance { case (res, bs) => (res - (if (bs(f) <= b) l else rv), bs) }
           }
         }
       }
       BoostModel(featCols, lo, widths, bins, base, stumps.toSeq, r)
-      } finally cur.unpersist(blocking = false)
     }
   }
 

@@ -710,10 +710,11 @@ object EvalQueries {
 
     // "Many models", logistic edition: an independent IRLS quality
     // classifier PER SOURCE, every Newton round still ONE distributed
-    // aggregation for all unconverged groups (per-group μ/σ/β ride a
-    // broadcast join table; converged groups leave it, so later rounds
-    // shrink). PLANTED per-group oracle: each source's label rule has a
-    // DIFFERENT slope (4 + idx mod 4) with a margin band excluded, so
+    // pass for all unconverged groups (per-group μ/σ/β ride a broadcast
+    // parameter map into one RDD fold; converged groups leave it, so
+    // later rounds shrink). PLANTED per-group oracle: each source's
+    // label rule has a DIFFERENT slope (4 + idx mod 4) with a margin
+    // band excluded, so
     // one global boundary cannot classify every group — only genuinely
     // per-group fits can. Same honesty contract as ml6: the query
     // ASSERTS the per-group separating property (min signed fit margin

@@ -93,17 +93,18 @@ object Monitoring {
     private val sinkFailureCount =
       new java.util.concurrent.atomic.AtomicLong(0L)
 
-    /** Buffer the alert, then fan it out to every sink. A sink failure
-      * is counted, never propagated — the listener bus must survive a
-      * dead pager.
+    /** Fan the alert out to every sink, then buffer it, so an alert
+      * visible in [[alerts]] has already been handed to every sink. A
+      * sink failure is counted, never propagated — the listener bus must
+      * survive a dead pager.
       */
     private def raise(a: Alert): Unit = {
-      alertsBuf.add(a)
       sinks.foreach { s =>
         try s.deliver(a)
         catch { case scala.util.control.NonFatal(_) =>
           sinkFailureCount.incrementAndGet() }
       }
+      alertsBuf.add(a)
     }
 
     def alerts: Seq[Alert] = {

@@ -94,6 +94,20 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       .orderBy("pa", "pb").as[(Long, Long)].collect().toSeq == viaRaw)
   }
 
+  test("basketPairs: a basket column named like a lambda variable gives the same pairs") {
+    val bk = Graph.basketSets(Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L),
+      (2L, 13L), (3L, 14L)).toDF("g", "item"), "g", "item")
+    def pairs(name: String): Seq[(Long, Long)] =
+      Graph.basketPairs(bk.withColumnRenamed("basket", name), name)
+        .orderBy("pa", "pb").as[(Long, Long)].collect().toSeq
+    val expected = Seq((10L, 11L), (10L, 12L), (10L, 13L), (11L, 12L))
+    assert(pairs("basket") == expected)
+    // `x` and `i` are the names a hand-written SQL lambda would bind; a
+    // name with a space must be quoted in SQL text
+    for (name <- Seq("x", "i", "my basket"))
+      assert(pairs(name) == expected, s"basket column '$name'")
+  }
+
   test("cooccurrencePairs equals the self-join formulation") {
     val rnd = new scala.util.Random(17)
     val rows = Seq.fill(600)((rnd.nextInt(80).toLong, rnd.nextInt(25).toLong))

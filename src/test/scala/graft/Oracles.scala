@@ -75,4 +75,49 @@ object Oracles {
       xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
         element_at(sig, b * rowsPerBand + r + 1))): _*)
     }: _*)
+
+  /** One stump of [[boostStumpsSlow]], with the gain it won by and the
+    * best gain of any other (feature, bin) candidate that round.
+    */
+  final case class SlowStump(feature: Int, splitBin: Int, left: Double,
+      right: Double, gain: Double, runnerUp: Double)
+
+  /** `Trainer.boostStumps` the slow way, on collected (label, features)
+    * rows: the same fixed-width binning, base mean, SSE-reduction split
+    * sweep and lowest-(feature, bin) tie-break, but every round
+    * recomputes each residual from scratch as y − (base + Σ deltas)
+    * instead of folding the new stump into a stored residual.
+    */
+  def boostStumpsSlow(rows: Seq[(Double, Array[Double])], rounds: Int,
+      bins: Int, lr: Double = 1.0, tol: Double = 1e-12): Seq[SlowStump] = {
+    val d = rows.head._2.length
+    val lo = Array.tabulate(d)(i => rows.map(_._2(i)).min)
+    val hi = Array.tabulate(d)(i => rows.map(_._2(i)).max)
+    val bin = rows.map { case (_, xs) => Array.tabulate(d)(i =>
+      math.min(math.floor((xs(i) - lo(i)) / ((hi(i) - lo(i)) / bins)), bins - 1.0).toInt)
+    }
+    val base = rows.map(_._1).sum / rows.size
+    val stumps = scala.collection.mutable.ArrayBuffer.empty[SlowStump]
+    var done = false
+    while (stumps.size < rounds && !done) {
+      val resid = rows.indices.map(j => rows(j)._1 - (base + stumps.map(s =>
+        if (bin(j)(s.feature) <= s.splitBin) s.left else s.right).sum))
+      val tot = resid.sum
+      val cands = for { f <- 0 until d; b <- 0 until bins - 1 } yield {
+        val left = resid.indices.filter(j => bin(j)(f) <= b)
+        val (nL, nR) = (left.size, resid.size - left.size)
+        val sL = left.map(resid).sum
+        val sR = tot - sL
+        val gain = if (nL > 0 && nR > 0)
+          sL * sL / nL + sR * sR / nR - tot * tot / resid.size
+        else Double.NegativeInfinity
+        SlowStump(f, b, lr * sL / nL, lr * sR / nR, gain, Double.NaN)
+      }
+      val best = cands.indices.reduceLeft((a, c) => if (cands(c).gain > cands(a).gain) c else a)
+      if (cands(best).gain <= 0.0 || cands(best).gain < tol) done = true
+      else stumps += cands(best).copy(runnerUp =
+        cands.indices.filter(_ != best).map(cands(_).gain).max)
+    }
+    stumps.toSeq
+  }
 }

@@ -199,6 +199,85 @@ class TrainerSpec extends SparkSpec {
     assert(ex.select(m0.score).distinct().as[Double].collect().toSeq == Seq(6.0))
   }
 
+  test("boostStumps on a non-dyadic fixture matches the slow recompute-residual booster") {
+    import graft.operators.Trainer.boostStumps
+    // 17×17 integer grid, x3 a deterministic mix of x1 and x2 (so the
+    // features are NOT independent and boosting keeps finding splits);
+    // bins = 16 puts every integer in its own bin (15 and 16 share the
+    // last), so no two split candidates cut the same partition. The
+    // step heights are non-dyadic: the operator's folded residual
+    // ((y − base) − d1) − d2 … and the reference's y − (base + Σ d)
+    // round differently, and the stump sequence must not care. Every
+    // round's winning gain beats the runner-up candidate by at least
+    // 0.019 (round 8: 0.0910 vs 0.0719; round 1: 94.2 vs 77.6) — eleven
+    // orders of magnitude above the FP-sum noise of gains this size.
+    val rows = for { a <- 0 to 16; b <- 0 to 16 } yield {
+      val c = (3 * a + 5 * b) % 17
+      val y = 1.1 * (if (a > 4) 1 else 0) + 0.7 * (if (b > 10) 1 else 0) +
+        0.37 * (if (a > 11) 1 else 0) + 0.23 * (if (c > 7) 1 else 0) +
+        0.13 * (if (b > 2 && c < 5) 1 else 0)
+      (a.toDouble, b.toDouble, c.toDouble, y)
+    }
+    val df = rows.toDF("x1", "x2", "x3", "y")
+    val rounds = 8
+    val got = boostStumps(df.repartition(3), Seq("x1", "x2", "x3"), "y",
+      rounds = rounds, bins = 16)
+    val ref = Oracles.boostStumpsSlow(
+      rows.map { case (a, b, c, y) => (y, Array(a, b, c)) }, rounds, bins = 16)
+    assert(ref.forall(s => s.gain - s.runnerUp > 0.01), s"gain gaps ${
+      ref.map(s => s.gain - s.runnerUp)}")
+    assert(ref.size == rounds && got.roundsRun == rounds)
+    assert(got.stumps.map(s => (s.feature, s.splitBin)) ==
+      ref.map(s => (s.feature, s.splitBin)))
+    got.stumps.zip(ref).foreach { case (g, r) =>
+      assert(math.abs(g.leftValue - r.left) < 1e-9 &&
+        math.abs(g.rightValue - r.right) < 1e-9, s"leaves $g vs $r")
+    }
+  }
+
+  test("the four round-loop trainers leave no persistent RDD behind, fit or fail-fast") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def noLeak(what: String)(body: => Unit): Unit = {
+      val before = persisted
+      body
+      assert((persisted -- before).isEmpty, s"$what leaked ${persisted -- before}")
+    }
+    def failsWith(msg: String)(fit: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](fit)
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    val df = planted(200, margin = 0.5)
+    val counts = (0 until 60).map(i => (i % 6 * 0.5, i / 6 * 1.0,
+      math.exp(0.2 + 0.1 * (i % 6) - 0.05 * (i / 6)))).toDF("x1", "x2", "y")
+    // an exact duplicate feature with l2 = 0 makes the Newton system
+    // singular: the fit fails INSIDE its first round, after the pin
+    val dup = df.withColumn("x1b", col("x1"))
+    val const = df.withColumn("c", lit(3.0))
+    noLeak("logisticFit")(Trainer.logisticFit(df, Seq("x1", "x2"), "y"))
+    noLeak("logisticFit fail-fast")(failsWith("zero-variance")(
+      Trainer.logisticFit(const, Seq("x1", "c"), "y")))
+    noLeak("logisticFit round failure")(failsWith("singular")(
+      Trainer.logisticFit(dup, Seq("x1", "x1b"), "y", l2 = 0.0)))
+    noLeak("poissonFit")(Trainer.poissonFit(counts, Seq("x1", "x2"), "y"))
+    noLeak("poissonFit fail-fast")(failsWith(">= 0")(
+      Trainer.poissonFit(counts.withColumn("y", col("y") - 10.0), Seq("x1", "x2"), "y")))
+    noLeak("poissonFit round failure")(failsWith("singular")(
+      Trainer.poissonFit(counts.withColumn("x1b", col("x1")), Seq("x1", "x1b"), "y",
+        l2 = 0.0)))
+    val grouped = df.withColumn("g", (col("x1") > 0).cast("int"))
+    noLeak("logisticFitPerGroup")(Trainer.logisticFitPerGroup(grouped, "g",
+      Seq("x1", "x2"), "y").collect())
+    noLeak("logisticFitPerGroup fail-fast")(failsWith("zero-variance")(
+      Trainer.logisticFitPerGroup(grouped.withColumn("c", lit(1.0)), "g",
+        Seq("x1", "c"), "y")))
+    noLeak("logisticFitPerGroup round failure")(failsWith("singular")(
+      Trainer.logisticFitPerGroup(grouped.withColumn("x1b", col("x1")), "g",
+        Seq("x1", "x1b"), "y", l2 = 0.0)))
+    noLeak("boostStumps")(Trainer.boostStumps(df, Seq("x1", "x2"), "y", rounds = 5))
+    noLeak("boostStumps fail-fast")(failsWith("zero-variance")(
+      Trainer.boostStumps(const, Seq("x1", "c"), "y")))
+  }
+
   test("crossValidateRidgeScored: OOF rows = input rows, folds match kFold, leak-free predictions recover the plant") {
     import graft.operators.{Sampling, Trainer}
     val df = (0 until 400).map { i =>
