@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,19 +16,9 @@ import org.apache.spark.sql.functions._
   * the ordered corpus — reproducible across runs and engines — and it is
   * exactly expressible in SQL for the oracle.
   *
-  * The global running sum does NOT use a global window (an
-  * `orderBy`-without-`partitionBy` window collapses to ONE task — dead
-  * at any scale). Distributed prefix-sum instead:
-  *   1. learn `numPartitions-1` quantile boundaries of `orderCol` (one
-  *      stats pass); a row's RANGE GROUP is a deterministic pure
-  *      function of its own `orderCol` value — unlike
-  *      `spark_partition_id` after `repartitionByRange`, whose sampled
-  *      bounds can differ between two actions on the same plan;
-  *   2. per-group token totals → collected (P longs on the driver);
-  *   3. exclusive group offsets go back in as a literal lookup array;
-  *      a group-partitioned window (groups are range-disjoint) adds the
-  *      local running sum.
-  * Two passes over the data, driver state O(groups).
+  * The global running sum is the engine's distributed prefix sum
+  * ([[Rank.bucketStats]]), never an `orderBy`-without-`partitionBy`
+  * window (that collapses to ONE task — dead at any scale).
   */
 object Packing {
 
@@ -36,60 +26,20 @@ object Packing {
     * ascending `orderCol` (a UNIQUE numeric key — ties would make the
     * within-group order, and so the offsets, ambiguous) into
     * `budget`-token sequences. `numPartitions` <= 0 ⇒ session default
-    * parallelism.
+    * parallelism. A null order value fails fast.
     */
   def packByOffset(docs: DataFrame, tokenCol: String, orderCol: String,
       budget: Long, numPartitions: Int = 0): DataFrame = {
     require(budget >= 1, "budget must be >= 1")
-    val spark = docs.sparkSession
-    val parts = math.max(1,
-      if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism)
-    val grouped = docs.withColumn("__g", rangeGroup(docs, orderCol, parts))
-    val totals = grouped.groupBy("__g")
-      .agg(sum(col(tokenCol).cast("long")).as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val maxG = if (totals.isEmpty) 0 else totals.keys.max
-    // exclusive prefix offsets, indexed by group (empty groups add 0)
-    val offsets = (0 to maxG).scanLeft(0L)((acc, g) => acc + totals.getOrElse(g, 0L))
-    val offsetExpr: Column = element_at(
-      array(offsets.take(maxG + 1).map(lit(_)): _*), col("__g") + 1)
+    val b = Rank.bucketStats("packByOffset", docs, orderCol, numPartitions)(
+      sum(col(tokenCol).cast("long")).as("t"))
     val local = Window.partitionBy("__g").orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grouped
+    b.grouped
       .withColumn("start_offset",
-        offsetExpr + sum(col(tokenCol).cast("long")).over(local) - col(tokenCol))
+        b.offsetExpr(0) + sum(col(tokenCol).cast("long")).over(local) - col(tokenCol))
       .withColumn("pack_id", floor(col("start_offset") / budget))
       .drop("__g")
-  }
-
-  /** Deterministic range-group id in [0, parts): quantile bucket of
-    * `orderCol`. Groups are range-disjoint and ascending in `orderCol`,
-    * so a per-group sort is a valid segment of the global sort.
-    */
-  private[operators] def rangeGroup(docs: DataFrame, orderCol: String, parts: Int): Column =
-    if (parts <= 1) lit(0)
-    else {
-      val probs = (1 until parts).map(_.toDouble / parts).toArray
-      val bounds = docs.stat.approxQuantile(orderCol, probs, 0.01).distinct.sorted
-      if (bounds.isEmpty) lit(0)
-      else graft.functions.QuantileBucket.bucket(col(orderCol).cast("double"), bounds)
-    }
-
-  /** The exclusive-prefix-offset lookup shared by the distributed
-    * prefix-sum family ([[graft.operators.Rank.globalRank]],
-    * [[graft.operators.Sampling.deterministicShuffle]]): given the
-    * collected (bucket id → row count) pairs of a [[rangeGroup]]-style
-    * bucketing, an expression mapping the bucket column to the number of
-    * rows in all SMALLER buckets. One definition so the off-by-one
-    * surface (scanLeft seeding, the +1 of element_at's 1-based indexing,
-    * absent-bucket zero fill) is decided once.
-    */
-  private[operators] def bucketOffsetExpr(counts: Map[Int, Long], gCol: Column): Column = {
-    val maxG = if (counts.isEmpty) 0 else counts.keys.max
-    val offsets = (0 to maxG).scanLeft(0L)((acc, g) => acc + counts.getOrElse(g, 0L))
-    element_at(
-      array(offsets.take(maxG + 1).map(lit(_)).toIndexedSeq: _*), gCol + 1)
   }
 
   /** Length-bucketed inference batching: group rows into fixed-size

@@ -86,9 +86,9 @@ object Profile {
     *
     * The cumulative counts are NOT a global window (one task): values
     * group to (v, c_a, c_b) first — state is O(distinct quantized
-    * values), not O(rows) — then the same range-segmented prefix-sum as
-    * [[Packing.packByOffset]] builds C_a, C_b per segment with driver
-    * state O(segments). Headroom: the C·n products need n_a·n_b < 2⁶³
+    * values), not O(rows) — then the family's distributed prefix sum
+    * ([[Rank.bucketStats]]) builds C_a and C_b from one stats pass with
+    * driver state O(buckets). Headroom: the C·n products need n_a·n_b < 2⁶³
     * (~3×10⁹ rows per side) and that bound is ENFORCED (require, not
     * silent wrap-around); the final ×10⁶ scaling runs in decimal(19,0)
     * so it cannot overflow inside the enforced range. Beyond the
@@ -105,31 +105,21 @@ object Profile {
       .groupBy("v").agg(count(lit(1)).as(name))
     val merged = q(a, "ca").join(q(b, "cb"), Seq("v"), "full_outer")
       .na.fill(0L, Seq("ca", "cb"))
-    val parts = math.max(1,
-      if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism)
-    val grouped = merged.withColumn("__g", Packing.rangeGroup(merged, "v", parts))
-    val segs = grouped.groupBy("__g")
-      .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    if (segs.isEmpty) return Seq.empty[(Long, Long, Long)].toDF("n_a", "n_b", "ks_x1e6")
-    val maxG = segs.keys.max
-    val offs = (0 to maxG).scanLeft((0L, 0L)) { case ((oa, ob), g) =>
-      val (ta, tb) = segs.getOrElse(g, (0L, 0L)); (oa + ta, ob + tb)
-    }
-    val (na, nb) = offs.last
+    val bk = Rank.bucketStats("ksStatistic", merged, "v", numPartitions,
+      orderName = valueCol)(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
+    if (bk.rows.isEmpty) return Seq.empty[(Long, Long, Long)].toDF("n_a", "n_b", "ks_x1e6")
+    val na = bk.rows.map(_.getLong(1)).sum
+    val nb = bk.rows.map(_.getLong(2)).sum
     val nanb = BigInt(na) * BigInt(nb)
     require(nanb <= Long.MaxValue,
       s"ksStatistic: n_a*n_b = $nanb exceeds 2^63 — the C*n fixed-point " +
         "products would wrap silently; scale counts down or subsample one side")
-    val offA = element_at(array(offs.take(maxG + 1).map(o => lit(o._1)): _*), col("__g") + 1)
-    val offB = element_at(array(offs.take(maxG + 1).map(o => lit(o._2)): _*), col("__g") + 1)
     val local = org.apache.spark.sql.expressions.Window
       .partitionBy("__g").orderBy("v")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    grouped
-      .withColumn("__cA", offA + sum(col("ca")).over(local))
-      .withColumn("__cB", offB + sum(col("cb")).over(local))
+    bk.grouped
+      .withColumn("__cA", bk.offsetExpr(0) + sum(col("ca")).over(local))
+      .withColumn("__cB", bk.offsetExpr(1) + sum(col("cb")).over(local))
       .agg(max(abs(col("__cA") * nb - col("__cB") * na)).as("__d"))
       .select(lit(na).as("n_a"), lit(nb).as("n_b"),
         when(lit(na) === 0 || lit(nb) === 0, lit(null).cast("long"))

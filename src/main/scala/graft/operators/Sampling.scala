@@ -260,26 +260,6 @@ object Sampling {
       .drop("u")
   }
 
-  /** Deterministic global corpus shuffle: add `shuffle_pos` — the row's
-    * 0-based position in ascending (md5(id ‖ salt), id) order — the
-    * "shuffle the corpus once, read it sequentially" step before
-    * training. Because the key is a pure function of the id, the
-    * permutation is identical under any partitioning, engine, or re-run
-    * (a `rand(seed)`-keyed sort is not: seeds are per-partition), and an
-    * external reader can verify it from the ids alone.
-    *
-    * The position is NOT a global window (single task at scale): same
-    * distributed prefix-sum as [[Packing.packByOffset]] — range-group on
-    * the hash key (uniform, so groups balance), per-group counts to the
-    * driver (O(parts) longs), exclusive offsets back as a literal array,
-    * row_number within each range-disjoint group. Two passes. To
-    * MATERIALIZE the shuffled corpus at 100 TB, write with
-    * `.repartitionByRange(col("shuffle_pos"))` + sortWithinPartitions —
-    * sorted files, no single-task stage anywhere.
-    *
-    * Hash ties (32-bit key space) are broken by id, so the order is
-    * total for unique ids.
-    */
   /** Deterministic per-group cost-budget selection: within each group,
     * walk the rows in shuffled-but-reproducible order (md5 hash of id,
     * ties by id) and keep rows while the running `costCol` total stays
@@ -296,13 +276,10 @@ object Sampling {
     * comparable).
     *
     * Scale shape: the running sum is NOT one window per group (a single
-    * reducer per domain at 100 TB). Same two-pass distributed prefix-sum
-    * as [[Packing.packByOffset]]: range-segment the hash key, per
-    * (group, segment) cost totals to the driver (O(groups × segments)
-    * longs, bounded), exclusive per-group offsets re-join broadcast, and
-    * the window runs within (group, segment) — range-disjoint segments
-    * make the per-segment running sums a valid segment of the group's
-    * global walk. Emits `budget_run` (the inclusive running cost) so the
+    * reducer per domain at 100 TB) but the family's distributed prefix
+    * sum ([[Rank.bucketStats]]) with the group as its series: the hash
+    * key is range-segmented, and the window runs within (group,
+    * segment). Emits `budget_run` (the inclusive running cost) so the
     * selection is self-auditing.
     */
   def budgetPerGroup(df: DataFrame, groupCol: String, idCol: String,
@@ -318,9 +295,9 @@ object Sampling {
     * row number computed by distributed prefix-sum instead of one
     * window per group.
     *
-    * Null discipline: a null group key or a null/uncastable cost FAILS
-    * FAST (IllegalArgumentException in the same aggregation pass that
-    * builds the segment totals — no extra scan). Silently dropping such
+    * Null discipline: a null group key, a null id or a null/uncastable
+    * cost FAILS FAST (IllegalArgumentException in the same aggregation
+    * pass that builds the segment totals — no extra scan). Silently dropping such
     * rows would corrupt the budget semantics (the kept set must be a
     * pure function of the full input); callers with legitimately
     * optional groups filter explicitly first.
@@ -329,38 +306,22 @@ object Sampling {
       costCol: String, salt: String = "graft",
       numPartitions: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val parts = math.max(1,
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.sparkContext.defaultParallelism)
-    val keyed = df.withColumn("__k", hashValue(col(idCol), salt))
-    val grouped = keyed.withColumn("__g", Packing.rangeGroup(keyed, "__k", parts))
-    val segRows = grouped.groupBy(col(groupCol).cast("string").as("__grp"), col("__g"))
-      .agg(sum(col(costCol).cast("long")).as("t"),
-        count(when(col(costCol).isNull || col(costCol).cast("long").isNull,
-          lit(1))).as("__badCost"))
-      .collect()
-    require(segRows.forall(r => !r.isNullAt(0)),
-      s"groupRunningCost: null values in group column '$groupCol' — filter " +
-        "them explicitly first; silently dropping would corrupt the budget walk")
-    require(segRows.forall(_.getLong(3) == 0L),
+    val op = "groupRunningCost"
+    val b = Rank.bucketStats(op, hashKeyed(op, df, idCol, salt), "__k",
+      numPartitions, Seq(groupCol), orderName = idCol)(
+      sum(col(costCol).cast("long")).as("t"),
+      count(when(col(costCol).isNull || col(costCol).cast("long").isNull,
+        lit(1))).as("__badCost"))
+    require(b.rows.forall(_.getLong(3) == 0L),
       s"groupRunningCost: null or uncastable values in cost column '$costCol' " +
         "— filter or repair them explicitly first")
-    val segs = segRows.map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    // exclusive per-group prefix offsets over the ascending segment ids
-    val offRows = segs.groupBy(_._1).toSeq.flatMap { case (grp, rows) =>
-      val sorted = rows.sortBy(_._2)
-      sorted.map(_._2).zip(sorted.map(_._3).scanLeft(0L)(_ + _))
-        .map { case (seg, off) => (grp, seg, off) }
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = offRows.toDF("__grp", "__g2", "__off")
+    val offDf = b.offsetTable(0).toDF("__grp", "__g2", "__off")
     val local = Window.partitionBy(col(groupCol), col("__g"))
       .orderBy(col("__k"), col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grouped
+    b.grouped
       .join(broadcast(offDf),
-        col(groupCol).cast("string") === col("__grp") && col("__g") === col("__g2"))
+        col(groupCol) === col("__grp") && col("__g") === col("__g2"))
       .withColumn("budget_run",
         col("__off") + sum(col(costCol).cast("long")).over(local))
       .drop("__k", "__g", "__grp", "__g2", "__off")
@@ -426,22 +387,47 @@ object Sampling {
         col("__cum").as("cum"), col("copies"))
   }
 
+  /** Deterministic global corpus shuffle: add `shuffle_pos` — the row's
+    * 0-based position in ascending (md5(id ‖ salt), id) order — the
+    * "shuffle the corpus once, read it sequentially" step before
+    * training. Because the key is a pure function of the id, the
+    * permutation is identical under any partitioning, engine, or re-run
+    * (a `rand(seed)`-keyed sort is not: seeds are per-partition), and an
+    * external reader can verify it from the ids alone.
+    *
+    * The position is NOT a global window (single task at scale) but the
+    * family's distributed prefix sum ([[Rank.bucketStats]]) over the hash
+    * key (uniform, so buckets balance): per-bucket counts, exclusive
+    * offsets, row_number within each bucket. A null id fails fast. To
+    * MATERIALIZE the shuffled corpus at 100 TB, write with
+    * `.repartitionByRange(col("shuffle_pos"))` + sortWithinPartitions —
+    * sorted files, no single-task stage anywhere.
+    *
+    * Hash ties (32-bit key space) are broken by id, so the order is
+    * total for unique ids.
+    */
   def deterministicShuffle(df: DataFrame, idCol: String,
       salt: String = "graft", numPartitions: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val parts = math.max(1,
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.sparkContext.defaultParallelism)
-    val keyed = df.withColumn("__k", hashValue(col(idCol), salt))
-    val grouped = keyed.withColumn("__g", Packing.rangeGroup(keyed, "__k", parts))
-    val counts = grouped.groupBy("__g").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsetExpr = Packing.bucketOffsetExpr(counts, col("__g"))
+    val op = "deterministicShuffle"
+    val b = Rank.bucketStats(op, hashKeyed(op, df, idCol, salt), "__k",
+      numPartitions, orderName = idCol)(count(lit(1)).as("n"))
     val local = Window.partitionBy("__g").orderBy(col("__k"), col(idCol))
-    grouped
+    b.grouped
       .withColumn("shuffle_pos",
-        offsetExpr + row_number().over(local).cast("long") - 1L)
+        b.offsetExpr(0) + row_number().over(local).cast("long") - 1L)
       .drop("__k", "__g")
+  }
+
+  /** The frame the two hash-ordered walks ([[deterministicShuffle]],
+    * [[groupRunningCost]]) bucket on: `__k` = [[hashValue]] of the id,
+    * null iff the id is null. A caller `__k` column would be silently
+    * overwritten, so it fails fast like `__g` ([[Rank.requireFree]]).
+    */
+  private def hashKeyed(op: String, df: DataFrame, idCol: String,
+      salt: String): DataFrame = {
+    Rank.requireFree(op, df, "__k", "hash-key")
+    df.withColumn("__k", hashValue(col(idCol), salt))
   }
 
   /** Temperature-scaled source mixture at α = 1/2 (the UnifiedQA /

@@ -77,9 +77,9 @@ object Skyline {
       it.foreach { r =>
         // null AND NaN rows are dropped: Java </> comparisons with NaN
         // are always false, so a NaN row would never be dominated (nor
-        // dominate) and live in every front forever — and the naive
-        // reference formulation (na.drop) already treats NaN as missing.
-        // All three forms (skyline / skylineExec / skylineNaive) agree.
+        // dominate) and live in every front forever — and the specs' naive
+        // anti-join reference (na.drop) already treats NaN as missing.
+        // skyline and skylineExec agree.
         if (!idx.exists { case (i, _) => r.isNullAt(i) || dim(r, i).isNaN }) {
           var dominated = false
           var k = 0
@@ -128,22 +128,5 @@ object Skyline {
     }
     org.apache.spark.sql.GraftSqlBridge.ofRows(df.sparkSession,
       graft.plans.SkylineNode(resolved, analyzed))
-  }
-
-  /** The naive O(n²) anti-join formulation — the semantic reference the
-    * two-phase operator is spec-tested against; never use at scale.
-    */
-  def skylineNaive(df: DataFrame, dims: Seq[(String, Boolean)]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val clean = df.na.drop(dims.map(_._1))
-    val a = clean.alias("a")
-    val b = clean.alias("b")
-    val geq = dims.map { case (c, asc) =>
-      if (asc) col(s"b.$c") <= col(s"a.$c") else col(s"b.$c") >= col(s"a.$c")
-    }.reduce(_ && _)
-    val strict = dims.map { case (c, asc) =>
-      if (asc) col(s"b.$c") < col(s"a.$c") else col(s"b.$c") > col(s"a.$c")
-    }.reduce(_ || _)
-    a.join(b, geq && strict, "left_anti")
   }
 }

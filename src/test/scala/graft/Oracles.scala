@@ -120,4 +120,20 @@ object Oracles {
     }
     stumps.toSeq
   }
+
+  /** The naive O(n²) anti-join formulation — the semantic reference
+    * `Skyline.skyline` is spec-tested against; never use at scale.
+    */
+  def skylineNaive(df: DataFrame, dims: Seq[(String, Boolean)]): DataFrame = {
+    val clean = df.na.drop(dims.map(_._1))
+    val a = clean.alias("a")
+    val b = clean.alias("b")
+    val geq = dims.map { case (c, asc) =>
+      if (asc) col(s"b.$c") <= col(s"a.$c") else col(s"b.$c") >= col(s"a.$c")
+    }.reduce(_ && _)
+    val strict = dims.map { case (c, asc) =>
+      if (asc) col(s"b.$c") < col(s"a.$c") else col(s"b.$c") > col(s"a.$c")
+    }.reduce(_ || _)
+    a.join(b, geq && strict, "left_anti")
+  }
 }

@@ -542,7 +542,7 @@ class PipelineOpsSpec extends SparkSpec {
     val df = rows.toDF("id", "size", "price").repartition(11)
     val dims = Seq(("price", true), ("size", false))
     val fast = Skyline.skyline(df, dims).select("id").as[Long].collect().toSet
-    val naive = Skyline.skylineNaive(df, dims).select("id").as[Long].collect().toSet
+    val naive = Oracles.skylineNaive(df, dims).select("id").as[Long].collect().toSet
     assert(fast == naive)
     assert(fast.contains(900L) && fast.contains(901L)) // equal points both survive
     // a null in a skyline dimension drops the row, never poisons dominance
@@ -555,7 +555,7 @@ class PipelineOpsSpec extends SparkSpec {
     // in every front forever and diverge from the naive na.drop path)
     val withNaN = df.union(Seq((998L, 100, Double.NaN)).toDF("id", "size", "price"))
     val fastN = Skyline.skyline(withNaN, dims).select("id").as[Long].collect().toSet
-    val naiveN = Skyline.skylineNaive(withNaN, dims).select("id").as[Long].collect().toSet
+    val naiveN = Oracles.skylineNaive(withNaN, dims).select("id").as[Long].collect().toSet
     assert(fastN == fast && naiveN == fast, "NaN row must be dropped, not kept forever")
     val execN = Skyline.skylineExec(withNaN, dims).select("id").as[Long].collect().toSet
     assert(execN == fast, "SkylineExec must drop NaN rows like the other forms")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Rank
+import graft.operators.{Packing, Rank, Sampling}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -53,6 +53,21 @@ class RankSpec extends SparkSpec {
       Rank.globalRank(allNull, "v", Seq("id")).count()
     }
     assert(e2.getMessage.contains("null"))
+    // the family members outside Rank, at both kinds of width: one bucket
+    // (where a null could be ranked first) and several (where a null
+    // bucket id could reach the driver's offset lookup)
+    val docs = ((1L to 40L).map(i => (Option(i), i % 3, 5L)) :+ ((None, 1L, 5L)))
+      .toDF("doc_id", "src", "n")
+    def msg(f: => Any): String =
+      intercept[IllegalArgumentException](f).getMessage
+    for (parts <- Seq(1, 4)) {
+      for (m <- Seq(
+          msg(Packing.packByOffset(docs, "n", "doc_id", 10L, numPartitions = parts)),
+          msg(Sampling.deterministicShuffle(docs, "doc_id", numPartitions = parts)),
+          msg(Sampling.groupRunningCost(docs, "src", "doc_id", "n",
+            numPartitions = parts))))
+        assert(m.contains("null") && m.contains("'doc_id'"), s"width $parts: $m")
+    }
   }
 
   test("globalRunningSum equals the single-sort running-sum reference, at any width") {
@@ -403,7 +418,7 @@ class RankSpec extends SparkSpec {
     assert(none == Seq(("a", 3L, 0L)))
   }
 
-  test("a caller '__g' column fails fast in ALL FOUR entry points (shared guard)") {
+  test("a caller '__g' or '__k' column fails fast in every family entry point") {
     // withColumn would silently overwrite the caller's column with the
     // internal range bucket — every sibling must refuse it, not just
     // globalRunningSum (where the hazard was first found live)
@@ -415,5 +430,14 @@ class RankSpec extends SparkSpec {
     assert(msg(Rank.globalSweep(df, "v", "c")).contains("__g"))
     assert(msg(Rank.globalLag(df, "v", "c")).contains("__g"))
     assert(msg(Rank.globalWeightedMedian(df, "v", "c")).contains("__g"))
+    assert(msg(Rank.globalBandedSum(df, "v", "c", _ => 1L, w => w)).contains("__g"))
+    // outside Rank the overwritten column would also vanish from the output
+    assert(msg(Packing.packByOffset(df, "c", "v", 10L)).contains("__g"))
+    assert(msg(Sampling.deterministicShuffle(df, "v")).contains("__g"))
+    assert(msg(Sampling.groupRunningCost(df, "c", "v", "c")).contains("__g"))
+    // the two hash-ordered walks add a '__k' key column the same way
+    val dk = Seq((1.0, 1L, "x"), (2.0, 1L, "y")).toDF("v", "c", "__k")
+    assert(msg(Sampling.deterministicShuffle(dk, "v")).contains("__k"))
+    assert(msg(Sampling.groupRunningCost(dk, "c", "v", "c")).contains("__k"))
   }
 }
