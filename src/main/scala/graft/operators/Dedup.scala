@@ -4,16 +4,31 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, each designed
-  * around its 100 TB shuffle shape:
+  * around its 100 TB shuffle shape. Exact dedup is one hash-partitioned
+  * groupBy on the dedup key (map-side partial aggregation halves the
+  * shuffle), never a window sort.
   *
-  *  - exact: one hash-partitioned groupBy on the dedup key (map-side
-  *    partial aggregation halves the shuffle) — never a window sort.
-  *  - MinHash+LSH: candidate generation groups docs by (band, bandHash)
-  *    bucket, so the shuffle is O(docs × bands) small fixed-width rows,
-  *    never O(docs²); the quadratic verify runs only inside buckets.
-  *  - SimHash: 64-bit signature; near-dup candidates via banded chunks of
-  *    the signature (Hamming ≤ 3 ⇒ some 16-bit chunk equal, pigeonhole).
-  *  - n-gram Jaccard: exact verify metric, computed on candidate pairs only.
+  * The near-duplicate family is filter-then-verify over two shared
+  * steps; each operator keeps only its blocking key, its pruning and its
+  * similarity:
+  *
+  *  - candidates, [[inListPairs]]: a document's blocking keys (minhash
+  *    band bucket, ppjoin prefix token, signature chunk, winnowing
+  *    fingerprint) are grouped to one sorted member list per key, and
+  *    every in-list pair is emitted in-row. One key-hashed shuffle of
+  *    O(docs × keys) small rows; the quadratic work stays inside a
+  *    bucket, spread across tasks by the uniform key. The textbook
+  *    self-join on the blocking key emits the same pairs but plans its
+  *    input once per join side (the two exchange subtrees canonicalize
+  *    differently once AQE wraps them, so ReuseExchange never fires) —
+  *    for minhash that is the whole signature pass twice, plus a third
+  *    shuffle for the pair distinct. The specs check the grouped form
+  *    against the self-join form (`Oracles` in the test tree).
+  *  - verify, [[jaccardAbove]]: exact shingle Jaccard ≥ threshold,
+  *    rounded to 6 places, on candidate pairs only, after
+  *    [[withShingles]] joins both sides' shingle arrays back by id.
+  *    [[ngramJaccardPairs]] feeds it the all-pairs product instead — the
+  *    exact reference the candidate paths are measured against.
   */
 object Dedup {
 
@@ -41,21 +56,50 @@ object Dedup {
     docs.withColumn("fp", TextAnalysis.fingerprint(col("text")))
       .groupBy("fp").agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("copies"))
 
+  /** One sorted member list `m` per blocking key: the input of
+    * [[inListPairs]].
+    */
+  private def blocks(rows: DataFrame, member: Column, keys: String*): DataFrame =
+    rows.groupBy(keys.map(col): _*).agg(sort_array(collect_list(member)).as("m"))
+
+  /** The family's candidate step: one (a, b) row for each pair of members
+    * sharing a list of the `members` column, a before b in list order.
+    * A member is an id, or a struct whose first field is the id (its
+    * payload rides into the pair); ids are distinct within a list, so
+    * a < b. Lists shorter than two are dropped first, and the posexplode
+    * keeps per-row memory at O(list), never an O(list²) pair array.
+    */
+  private[operators] def inListPairs(lists: DataFrame, members: String): DataFrame =
+    lists.select(col(members).as("m")).filter(size(col("m")) >= 2)
+      .select(posexplode(col("m")).as(Seq("i", "a")), col("m"))
+      .select(col("a"),
+        explode(slice(col("m"), col("i") + 2, size(col("m")) - col("i") - 1)).as("b"))
+
+  /** Attach both sides' shingle arrays from a per-doc (doc_id, sh)
+    * relation to candidate (a_id, b_id) rows: two id-keyed joins.
+    */
+  private def withShingles(cands: DataFrame, sh: DataFrame): DataFrame =
+    cands.join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
+      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
+
+  /** The family's verify step over (a_id, b_id, a_sh, b_sh) rows: exact
+    * Jaccard of the two distinct shingle arrays, kept at ≥ `threshold`,
+    * rounded to 6 places.
+    */
+  private def jaccardAbove(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.withColumn("jaccard", jaccardOfShingleArrays(col("a_sh"), col("b_sh")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
+
   /** MinHash+LSH near-duplicate pairs with exact Jaccard verification.
-    *
-    * Pipeline: signature → explode bands → group by (band, hash) bucket →
-    * emit in-bucket ordered pairs → distinct candidate pairs (a<b) →
-    * verify exact shingle Jaccard ≥ `threshold`. The only shuffles are the
-    * bucket groupBy and the distinct — both keyed on uniformly-hashed
-    * values, so they stay balanced under skew. (`selfJoinPairs = true`
-    * switches candidate generation to the textbook bucket self-join —
-    * identical output, kept as the semantic reference; it plans the
-    * signature pass twice, one per join side.)
+    * Blocking keys are the (band, band hash) buckets of each doc's
+    * signature; a pair sharing several bands is emitted once per band,
+    * so candidates are made distinct before the verify. The only shuffles
+    * are the bucket groupBy and the distinct — both keyed on uniformly
+    * hashed values, so they stay balanced under skew.
     */
   def minhashNearDups(docs: DataFrame, shingleK: Int = 3, numHashes: Int = 16,
-      bands: Int = 4, threshold: Double = 0.6,
-      selfJoinPairs: Boolean = false): DataFrame = {
-    val rowsPerBand = numHashes / bands
+      bands: Int = 4, threshold: Double = 0.6): DataFrame = {
     // Shingle ONCE per document — recomputing per candidate pair would be
     // O(pairs × doc-length), the difference between scan-bound and dead at
     // scale. The shingle relation is reused for both candidate generation
@@ -75,39 +119,10 @@ object Dedup {
       .select(col("doc_id"), col("pos").as("band"), col("col").as("bh"))
     // No singleton-bucket prefilter: it would compute `banded` (the
     // minhash pass) a third time — measured 25→40 s on a 1M-doc corpus.
-    // Candidate pairs via ONE shuffle: group each (band, bucket) to its
-    // sorted member list, then emit ordered pairs in-row. The textbook
-    // formulation is a bucket-keyed SELF-JOIN, but a self-join plans the
-    // band relation — i.e. the whole minhash pass, the expensive part —
-    // TWICE (the two exchange subtrees canonicalize differently once AQE
-    // wraps them, so ReuseExchange never fires), plus a third shuffle for
-    // the pair distinct. Grouping runs the signature pass once and
-    // replaces join+distinct with groupBy+distinct. Per-bucket work is
-    // still the unavoidable O(n²) pair emission, spread across tasks by
-    // the uniform bucket key; the posexplode keeps peak memory at O(n)
-    // per row rather than materializing an n² pair array per bucket.
-    val candidates = (if (selfJoinPairs) {
-      banded.select(col("band"), col("bh"), col("doc_id").as("a_id"))
-        .join(banded.select(col("band"), col("bh"), col("doc_id").as("b_id")),
-          Seq("band", "bh"))
-        .filter(col("a_id") < col("b_id"))
-        .select("a_id", "b_id")
-    } else {
-      val buckets = banded.groupBy(col("band"), col("bh"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) >= 2)
-      buckets
-        .select(posexplode(col("ids")).as(Seq("i", "a_id")), col("ids"))
-        .select(col("a_id"),
-          explode(slice(col("ids"), col("i") + 2, size(col("ids")) - col("i") - 1)).as("b_id"))
-    }).dropDuplicates("a_id", "b_id")
-
-    candidates
-      .join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
-      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
-      .withColumn("jaccard", jaccardOfShingleArrays(col("a_sh"), col("b_sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
+    val candidates = inListPairs(blocks(banded, col("doc_id"), "band", "bh"), "m")
+      .select(col("a").as("a_id"), col("b").as("b_id"))
+      .dropDuplicates("a_id", "b_id")
+    jaccardAbove(withShingles(candidates, sh), threshold)
   }
 
   /** Minhash signature from a precomputed shingle array — fused native
@@ -147,29 +162,27 @@ object Dedup {
     val sh = docs.select(col("doc_id"), TextAnalysis.shingles(col("text"), k).as("sh"))
     val a = sh.repartition(par).select(col("doc_id").as("a_id"), col("sh").as("a_sh"))
     val b = sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh"))
-    a.crossJoin(b).filter(col("a_id") < col("b_id"))
-      .filter(sizeRatioMayReach(col("a_sh"), col("b_sh"), threshold))
-      .withColumn("jaccard", jaccardOfShingleArrays(col("a_sh"), col("b_sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
+    jaccardAbove(a.crossJoin(b).filter(col("a_id") < col("b_id"))
+      .filter(sizeRatioMayReach(col("a_sh"), col("b_sh"), threshold)), threshold)
   }
 
   /** Prefix-filtered exact set-similarity join (the PPJoin family, Xiao
     * et al. 2008 "Efficient Similarity Joins for Near Duplicate
     * Detection") — the EXACT-Jaccard scale path. Same output contract as
     * [[ngramJaccardPairs]] (every pair with shingle-Jaccard ≥ threshold),
-    * but candidates come from an inverted index over each doc's PREFIX
-    * under a global rarest-first token order instead of an all-pairs
-    * product: two sets with J ≥ t and sizes n must share a token among
-    * their first n − ⌈t·n⌉ + 1 rarest shingles (pigeonhole on the
-    * required overlap), so joining on prefix tokens loses nothing, and
-    * at t = 0.9 the prefix is ~10% of each doc. Flow: document-frequency
-    * pass → rarest-first sort per doc → prefix explode → token-keyed
-    * equi-join (+ size-compatibility pruning t·nb ≤ na ∧ t·na ≤ nb) →
-    * exact Jaccard verify on the candidate pairs only. Every shuffle is
-    * keyed (token or doc id); nothing is quadratic in the corpus —
-    * verification work is proportional to candidates, which the prefix
-    * theorem bounds to genuinely-similar + rare-token-sharing pairs.
+    * but the blocking keys are each doc's PREFIX tokens under a global
+    * rarest-first token order instead of an all-pairs product: two sets
+    * with J ≥ t and sizes n must share a token among their first
+    * n − ⌈t·n⌉ + 1 rarest shingles (pigeonhole on the required overlap),
+    * so pairing on prefix tokens loses nothing, and at t = 0.9 the prefix
+    * is ~10% of each doc. Flow: document-frequency pass → rarest-first
+    * sort per doc → prefix explode → in-list pairs per token, members
+    * carrying their set size for the size-compatibility prune
+    * t·nb ≤ na ∧ t·na ≤ nb → exact Jaccard verify on the candidate pairs
+    * only. Every shuffle is keyed (token or doc id); nothing is quadratic
+    * in the corpus — verification work is proportional to candidates,
+    * which the prefix theorem bounds to genuinely-similar +
+    * rare-token-sharing pairs.
     */
   def ppjoinPairs(docs: DataFrame, k: Int = 3,
       threshold: Double = 0.5): DataFrame = {
@@ -179,10 +192,9 @@ object Dedup {
     // consumer), but a Materialize pin of the shingle table measured
     // pinned 2.69 s vs unpinned 2.43 s at 10× data — the shingle arrays
     // are LARGER than the text they derive from, so checkpointing them
-    // costs more than the shuffle-free scan+map recompute (contrast
-    // hammingNearDups' snap, which pins a 16-byte-per-row SIGNATURE —
-    // far smaller than its recompute input). Pin only relations smaller
-    // than their recompute, or whose recompute crosses a shuffle.
+    // costs more than the shuffle-free scan+map recompute. Pin only
+    // relations smaller than their recompute, or whose recompute crosses
+    // a shuffle.
     val sh = docs.select(col("doc_id"),
       TextAnalysis.shingles(col("text"), k).as("sh"))
       .filter(size(col("sh")) > 0)
@@ -197,28 +209,21 @@ object Dedup {
         (size(col("toks")) - ceil(lit(threshold) * size(col("toks"))) + 1)
           .cast("int").as("p"))
     val prefix = ordered
-      .select(col("doc_id"), col("n"),
+      .select(struct(col("doc_id"), col("n")).as("d"),
         explode(slice(col("toks"), lit(1), col("p"))).as("pt"))
-      .select(col("doc_id"), col("n"), col("pt.t").as("t"))
-    val cands = prefix.select(col("doc_id").as("a_id"), col("n").as("na"), col("t"))
-      .join(prefix.select(col("doc_id").as("b_id"), col("n").as("nb"), col("t")), Seq("t"))
-      .filter(col("a_id") < col("b_id") &&
-        lit(threshold) * col("nb") <= col("na") &&
-        lit(threshold) * col("na") <= col("nb"))
-      .select("a_id", "b_id").distinct()
-    cands
-      .join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
-      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
-      .withColumn("jaccard", jaccardOfShingleArrays(col("a_sh"), col("b_sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
+      .select(col("d"), col("pt.t").as("t"))
+    val cands = inListPairs(blocks(prefix, col("d"), "t"), "m")
+      .filter(lit(threshold) * col("b.n") <= col("a.n") &&
+        lit(threshold) * col("a.n") <= col("b.n"))
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id")).distinct()
+    jaccardAbove(withShingles(cands, sh), threshold)
   }
 
   /** 64-bit SimHash of the token multiset: per bit, majority vote of the
     * tokens' xxhash64 bits (ties → 0). Computed entirely per-row by a
     * fused native expression (graft.functions.SimHash64) — no explode, no
     * groupBy, ZERO shuffle: at 100 TB the signature pass is map-only and
-    * runs at scan speed; only the candidate join afterwards shuffles (and
+    * runs at scan speed; only the candidate step afterwards shuffles (and
     * that is keyed on 16-bit chunks).
     */
   def simhashExpr(text: Column): Column =
@@ -227,13 +232,15 @@ object Dedup {
   def simhash(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     docs.select(col(idCol), simhashExpr(col(textCol)).as("simhash"))
 
-  /** Hamming near-dup candidates over ANY 64-bit signature column (simhash,
+  /** Hamming near-dup pairs over ANY 64-bit signature column (simhash,
     * perceptual hash, …): split each signature into equal chunks — by
     * pigeonhole, Hamming ≤ h forces at least one chunk equal when there
-    * are > h chunks — equi-join on (chunk index, chunk value), then filter
-    * to true Hamming ≤ `maxHamming` via bit_count(xor). The chunk count is
-    * the smallest power of two giving the guarantee, so the join keys stay
-    * as wide (selective) as correctness allows.
+    * are > h chunks — pair the members of each (chunk index, chunk value)
+    * list, each member carrying its signature, then keep true Hamming
+    * ≤ `maxHamming` via bit_count(xor). The chunk count is the smallest
+    * power of two giving the guarantee, so the keys stay as wide
+    * (selective) as correctness allows. Rows with a null id or signature
+    * can never pair and are dropped up front.
     */
   def hammingNearDups(sigs: DataFrame, idCol: String, sigCol: String,
       maxHamming: Int): DataFrame = {
@@ -241,28 +248,20 @@ object Dedup {
     val chunks = if (maxHamming < 4) 4 else if (maxHamming < 8) 8 else 16
     val width = 64 / chunks
     val mask = (1L << width) - 1
-    // The signature relation feeds BOTH sides of the self-join below, so
-    // without materialization the upstream signature pass (codec feature
-    // extraction for media, tokenize+simhash for text) executes twice.
-    // Materialize pins just (id, sig) — ~16 B a row, cluster-cacheable
-    // even at 10^10 docs — runs the expensive pass once, and lets block
-    // cleanup ride on GC (the lazy result gives no unpersist point).
-    // Mode (localCheckpoint vs fault-tolerant persist vs off) is the
-    // graft.materialize.mode conf — see [[Materialize]].
-    val snap = Materialize(sigs.select(col(idCol), col(sigCol)))
-    val chunked = snap.select(col(idCol), col(sigCol),
-      posexplode(array((0 until chunks).map(c =>
-        shiftrightunsigned(col(sigCol), c * width).bitwiseAND(lit(mask))): _*)))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "ch")
-    val a = chunked.select(col("chunk"), col("ch"),
-      col(idCol).as("a_id"), col(sigCol).as("a_sig"))
-    val b = chunked.select(col("chunk"), col("ch"),
-      col(idCol).as("b_id"), col(sigCol).as("b_sig"))
-    a.join(b, Seq("chunk", "ch")).filter(col("a_id") < col("b_id"))
-      .dropDuplicates("a_id", "b_id")
-      .withColumn("hamming", bit_count(col("a_sig").bitwiseXOR(col("b_sig"))))
+    // The signature relation has one consumer (the chunk groupBy), so the
+    // upstream signature pass (codec feature extraction for media,
+    // tokenize+simhash for text) runs once without a pin.
+    // blocking key: (pos, col) = (chunk index, chunk value)
+    val chunked = sigs.filter(col(idCol).isNotNull && col(sigCol).isNotNull)
+      .select(struct(col(idCol).as("id"), col(sigCol).as("sig")).as("s"),
+        posexplode(array((0 until chunks).map(c =>
+          shiftrightunsigned(col(sigCol), c * width).bitwiseAND(lit(mask))): _*)))
+    // a pair sharing several chunks is emitted once per chunk
+    inListPairs(blocks(chunked, col("s"), "pos", "col"), "m")
+      .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
+        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
+      .dropDuplicates("a_id", "b_id")
   }
 
   /** SimHash near-dup candidates: [[hammingNearDups]] over the map-only
@@ -271,79 +270,41 @@ object Dedup {
   def simhashNearDups(docs: DataFrame, maxHamming: Int = 3): DataFrame =
     hammingNearDups(simhash(docs), "doc_id", "simhash", maxHamming)
 
-  /** Winnowing-based containment candidates: documents sharing at least
-    * `minShared` winnowing fingerprints. Fingerprinting is map-only; pair
-    * generation groups the exploded (doc, fp) relation by fingerprint
-    * value (uniform 64-bit hashes → balanced shuffle) and emits in-bucket
-    * pairs, never O(docs²).
+  /** Winnowing-based containment pairs: documents whose shared winnowing
+    * fingerprints cover at least `minContainment` of the smaller one's
+    * fingerprints (each doc counting only fingerprints in ≤ `maxDocFreq`
+    * docs). Fingerprinting is map-only; the blocking key is the
+    * fingerprint value (uniform 64-bit hashes → balanced shuffle), never
+    * O(docs²).
     */
   def winnowingNearDups(docs: DataFrame, k: Int = 5, w: Int = 4,
-      minContainment: Double = 0.5, maxDocFreq: Int = 50,
-      selfJoinPairs: Boolean = false): DataFrame = {
-    if (selfJoinPairs)
-      return winnowingNearDupsSelfJoin(docs, k, w, minContainment, maxDocFreq)
+      minContainment: Double = 0.5, maxDocFreq: Int = 50): DataFrame = {
     val exploded = docs.select(col("doc_id"),
       explode(TextAnalysis.winnowingFingerprints(col("text"), k, w)).as("fp"))
     // ONE shuffle keyed on fp groups each fingerprint to its sorted
     // member list; everything downstream (document frequency = list
-    // size, per-doc surviving-fp counts, in-bucket pair emission)
-    // derives from this relation, so the rolling-hash fingerprint pass
-    // runs twice (once per consumer below) instead of the ~6 leaf
-    // occurrences the df-join + fp self-join formulation plans (Spark
-    // has no cross-consumer subplan reuse, and AQE-wrapped exchanges
-    // never canonicalize equal). Fingerprints are distinct per doc, so
-    // size(ids) IS document frequency; a fp in more than `maxDocFreq`
-    // docs is boilerplate, not evidence of copying — and exactly what
-    // would make pair emission quadratic (d docs → d² pairs), so the
-    // cap also bounds every bucket's fan-out.
+    // size, per-doc surviving-fp counts, in-list pair emission) derives
+    // from this relation, so the rolling-hash fingerprint pass runs twice
+    // (once per consumer below). Fingerprints are distinct per doc, so
+    // size(m) IS document frequency; a fp in more than `maxDocFreq` docs
+    // is boilerplate, not evidence of copying — and exactly what would
+    // make pair emission quadratic (d docs → d² pairs), so the cap also
+    // bounds every bucket's fan-out.
     // The grouped relation is deliberately not pinned: measured on the
     // d7 corpus (sf0.1, min-of-3), a pin cost 27.7 s vs 27.1 s unpinned,
     // and a parquet scratch copy 60 s vs 22 s at 1M docs — fingerprinting
     // rides the page cache, so one recompute is cheaper than either copy.
-    val grouped = exploded.groupBy("fp")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= maxDocFreq)
+    val grouped = blocks(exploded, col("doc_id"), "fp")
+      .filter(size(col("m")) <= maxDocFreq)
     // containment denominator: how many sub-cap fps each doc kept
-    val sizes = grouped.select(explode(col("ids")).as("doc_id"))
+    val sizes = grouped.select(explode(col("m")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_fps"))
-    // ordered in-bucket pairs, then count shared fps per pair; the
-    // posexplode keeps per-row memory at O(bucket), never O(bucket²)
-    val shared = grouped.filter(size(col("ids")) >= 2)
-      .select(posexplode(col("ids")).as(Seq("i", "a_id")), col("ids"))
-      .select(col("a_id"),
-        explode(slice(col("ids"), col("i") + 2, size(col("ids")) - col("i") - 1)).as("b_id"))
-      .groupBy("a_id", "b_id")
+    // shared fps per in-list pair
+    val shared = inListPairs(grouped, "m")
+      .groupBy(col("a").as("a_id"), col("b").as("b_id"))
       .agg(count(lit(1)).as("shared_fps"))
     // containment = shared / |smaller surviving fp set| — robust to length
     // asymmetry (detects a document embedded inside a larger one)
-    shared
-      .join(sizes.select(col("doc_id").as("a_id"), col("n_fps").as("a_n")), "a_id")
-      .join(sizes.select(col("doc_id").as("b_id"), col("n_fps").as("b_n")), "b_id")
-      .withColumn("containment",
-        col("shared_fps").cast("double") / least(col("a_n"), col("b_n")))
-      .filter(col("containment") >= minContainment)
-      .select(col("a_id"), col("b_id"), col("shared_fps"),
-        round(col("containment"), 6).as("containment"))
-  }
-
-  /** The df-join + fp self-join formulation — kept as the spec-tested
-    * semantic reference for the grouped path above. Plans the fingerprint
-    * pass once per leaf occurrence (~6×).
-    */
-  private def winnowingNearDupsSelfJoin(docs: DataFrame, k: Int, w: Int,
-      minContainment: Double, maxDocFreq: Int): DataFrame = {
-    val exploded = docs.select(col("doc_id"),
-      explode(TextAnalysis.winnowingFingerprints(col("text"), k, w)).as("fp"))
-    val dfByFp = exploded.groupBy("fp").agg(count(lit(1)).as("df"))
-    val kept = exploded.join(dfByFp.filter(col("df") <= maxDocFreq).select("fp"), "fp")
-    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("n_fps"))
-    val pairable = exploded.join(
-      dfByFp.filter(col("df") >= 2 && col("df") <= maxDocFreq).select("fp"), "fp")
-    val shared = pairable.select(col("fp"), col("doc_id").as("a_id"))
-      .join(pairable.select(col("fp"), col("doc_id").as("b_id")), "fp")
-      .filter(col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id")
-      .agg(count(lit(1)).as("shared_fps"))
     shared
       .join(sizes.select(col("doc_id").as("a_id"), col("n_fps").as("a_n")), "a_id")
       .join(sizes.select(col("doc_id").as("b_id"), col("n_fps").as("b_n")), "b_id")
@@ -394,15 +355,17 @@ object Dedup {
       localEdgeThreshold: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
     val eSrc = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val eRdd = eSrc.rdd.persist()
-    val eCount = eRdd.count()
     val idType = eSrc.schema.head.dataType
     val ord = idOrdering(idType)
-    val small = eCount <= localEdgeThreshold && ord.isDefined
-    val touched: DataFrame = // (id, comp) for edge-touched vertices only
-      if (small) localUnionFind(eRdd, idType, ord.get, spark)
-      else labelPropagation(eRdd, idType, spark, maxIter, loopShufflePartitions)
-    eRdd.unpersist(blocking = false)
+    // both paths consume the edges eagerly, so the pin is released on
+    // every exit — a throwing edge pass included
+    val eRdd = eSrc.rdd.persist()
+    val (small, touched) = try { // touched: (id, comp), edge-touched vertices only
+      val small = eRdd.count() <= localEdgeThreshold && ord.isDefined
+      (small,
+        if (small) localUnionFind(eRdd, idType, ord.get, spark)
+        else labelPropagation(eRdd, idType, spark, maxIter, loopShufflePartitions))
+    } finally eRdd.unpersist(blocking = false)
     // Everything not in an edge is a singleton. On the small path the
     // label table is a LocalRelation (driver array) — broadcast it so the
     // corpus side stays a single map-only pass. Above the threshold it

@@ -23,11 +23,11 @@ object Graph {
     * with pa < pb for EVERY group containing both items. The naive form is
     * a self-join on the group key — two scans plus a shuffle each side;
     * this form aggregates each group's distinct items into one sorted
-    * array (one shuffle) and explodes the pairs map-side with
-    * higher-order functions, staying inside codegen. Sound because pair
-    * count per group is bounded by basket size² (baskets are small —
-    * orders, sessions, sentences), NOT corpus²; for degenerate giant
-    * groups, cap the basket upstream.
+    * array (one shuffle) and emits the pairs map-side with the dedup
+    * family's in-list pair step. Sound because pair count per group is
+    * bounded by basket size² (baskets are small — orders, sessions,
+    * sentences), NOT corpus²; for degenerate giant groups, cap the
+    * basket upstream.
     *
     * The item column must be integral: a lossy cast (string SKUs, doubles)
     * would silently null-drop rows, so non-integral inputs are rejected up
@@ -61,19 +61,14 @@ object Graph {
   }
 
   /** The pair-explosion half of [[cooccurrencePairs]] over a prebuilt
-    * (sorted, distinct) basket-array relation — map-side, inside codegen.
-    * The lambdas are built with the Column API, which names their
-    * variables afresh, so a basket column called `x` or `i` (or one
-    * that needs quoting) cannot be shadowed by them.
+    * (sorted, distinct) basket-array relation — map-side, through the
+    * dedup family's in-list pair step ([[Dedup.inListPairs]]), so per-row
+    * memory stays O(basket) instead of an O(basket²) pair array. The
+    * step renames the basket column before emitting, so its working
+    * columns cannot collide with a basket column named `i` or `a`.
     */
-  def basketPairs(baskets: DataFrame, basketCol: String): DataFrame = {
-    val basket = col(basketCol)
-    baskets
-      .select(explode(flatten(transform(basket, (x, i) =>
-        transform(slice(basket, i + 2, size(basket)),
-          y => struct(x.as("pa"), y.as("pb")))))).as("p"))
-      .select(col("p.pa").as("pa"), col("p.pb").as("pb"))
-  }
+  def basketPairs(baskets: DataFrame, basketCol: String): DataFrame =
+    Dedup.inListPairs(baskets, basketCol).select(col("a").as("pa"), col("b").as("pb"))
 
   /** Canonical undirected edge list: (u < v), loops dropped, duplicates
     * collapsed. Input columns may list either endpoint first.

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Fault-tolerance knob for the multi-consumer materialization points
-  * (the SimHash/pHash signature snapshot in [[Dedup.hammingNearDups]],
-  * the oriented edge set in [[Graph.triangleCount]]): one relation feeds
+  * (the oriented edge set in [[Graph.triangleCount]], each round's
+  * survivor set in [[Graph.kCore]]): one relation feeds
   * several differently-keyed joins, so without pinning it the expensive
   * upstream pass re-executes once per consumer (Spark has no
   * cross-consumer subplan reuse, and AQE-wrapped exchanges never
@@ -25,13 +25,12 @@ import org.apache.spark.storage.StorageLevel
   *    (cheap, spillable) recompute path alive.
   *  - `off`: no pinning; the upstream pass runs once per consumer.
   *    Semantics-identical under every mode (spec-pinned by
-  *    DedupSimilaritySpec/GraphSpec) — but the escape hatch is for
-  *    ONE-SHOT multi-consumer points (the signature snapshot, the
-  *    oriented edge set), NOT for iterative loops: without per-round
-  *    truncation a loop's plan references its predecessor several
-  *    times per round, so plan size and analysis cost grow
-  *    O(consumers^rounds) — a full-SF kCore(rounds = 5) under `off`
-  *    exhausts a 16 GB driver heap in Catalyst before a task runs
+  *    MaterializeSpec) — but the escape hatch is for ONE-SHOT
+  *    multi-consumer points (the oriented edge set), NOT for iterative
+  *    loops: without per-round truncation a loop's plan references its
+  *    predecessor several times per round, so plan size and analysis
+  *    cost grow O(consumers^rounds) — a full-SF kCore(rounds = 5) under
+  *    `off` exhausts a 16 GB driver heap in Catalyst before a task runs
   *    (observed round 10). Run iterative operators under
   *    `localCheckpoint` or `persist`.
   *

@@ -107,18 +107,13 @@ object Skyline {
   /** The skyline as a CUSTOM CATALYST OPERATOR: builds a
     * [[graft.plans.SkylineNode]] logical node over the DataFrame's
     * analyzed plan, planned into [[graft.plans.SkylineExec]] by
-    * [[graft.plans.SkylineStrategy]] (registered via GraftExtensions or
-    * `spark.experimental.extraStrategies`). Identical semantics to
+    * [[graft.plans.SkylineStrategy]], which [[graft.GraftExtensions]]
+    * injects into every `GraftSession`. Identical semantics to
     * [[skyline]]; this form participates in explain()/planning like a
     * native operator.
     */
   def skylineExec(df: DataFrame, dims: Seq[(String, Boolean)]): DataFrame = {
     require(dims.nonEmpty, "need at least one skyline dimension")
-    // self-register the planner strategy (idempotent, additive) so the
-    // API works on sessions built without GraftExtensions
-    val exp = df.sparkSession.experimental
-    if (!exp.extraStrategies.contains(graft.plans.SkylineStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.SkylineStrategy
     val analyzed = df.queryExecution.analyzed
     val resolved = dims.map { case (c, asc) =>
       val attr = analyzed.output.find(_.name == c).getOrElse(

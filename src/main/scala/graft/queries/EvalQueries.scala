@@ -47,7 +47,8 @@ object EvalQueries {
       score(col("text")).as("sc"))
 
   /** Shared confusion-cell table for the langid evaluations (ml1, ml5):
-    * one corpus pass (langId is a codegen'd integer argmax), ONE
+    * one corpus pass (langId runs interpreted: 20 stopword-hit
+    * `ArrayFilter` passes a row, and `ArrayFilter` has no codegen), ONE
     * partial-agg shuffle to the O(|langs|²) (actual, predicted, o)
     * table, pinned — every margin both consumers need re-aggregates
     * the tiny cell table, never the corpus.

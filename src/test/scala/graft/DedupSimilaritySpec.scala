@@ -86,8 +86,8 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(lsh == exact)
     // The bucket-groupBy pair generation (default) and the reference
     // bucket self-join must produce identical pair sets.
-    val viaJoin = Dedup.minhashNearDups(docs, shingleK = 3, numHashes = 16,
-      bands = 4, threshold = 0.8, selfJoinPairs = true)
+    val viaJoin = Oracles.minhashNearDupsSelfJoin(docs, shingleK = 3, numHashes = 16,
+      bands = 4, threshold = 0.8)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(viaJoin == lsh)
   }
@@ -185,8 +185,8 @@ class DedupSimilaritySpec extends SparkSpec {
     val subset = docs.limit(120)
     val a = Dedup.winnowingNearDups(subset, k = 5, w = 4, minContainment = 0.6)
       .orderBy("a_id", "b_id").collect().map(_.toSeq).toSeq
-    val c = Dedup.winnowingNearDups(subset, k = 5, w = 4, minContainment = 0.6,
-        selfJoinPairs = true)
+    val c = Oracles.winnowingNearDupsSelfJoin(subset, k = 5, w = 4,
+        minContainment = 0.6, maxDocFreq = 50)
       .orderBy("a_id", "b_id").collect().map(_.toSeq).toSeq
     assert(a == c)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Graph, Materialize}
+import graft.operators.{Graph, Materialize}
 import org.apache.spark.sql.functions._
 
 /** The graft.materialize.mode knob: every mode must produce identical
@@ -18,21 +18,19 @@ class MaterializeSpec extends SparkSpec {
     try f finally spark.conf.unset(Materialize.ConfKey)
   }
 
-  test("simhashNearDups is identical under every materialize mode") {
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "the quick brown fox jumps over the lazy dog"),
-      (3L, "pack my box with five dozen liquor jugs"),
-      (4L, "sphinx of black quartz judge my vow"),
-      (5L, "the quick brown fox jumps over the lazy cat")
-    ).toDF("doc_id", "text")
+  test("kCore is identical under every materialize mode") {
+    val edges = Seq(
+      (1L, 2L), (2L, 3L), (1L, 3L), // triangle
+      (3L, 4L), (4L, 5L), (3L, 5L), // triangle
+      (5L, 6L), (6L, 7L)            // dangling path
+    ).toDF("u", "v")
     val results = modes.map { m =>
-      withMode(m)(Dedup.simhashNearDups(docs, maxHamming = 3)
-        .orderBy("a_id", "b_id").collect().toSeq)
+      withMode(m)(Graph.kCore(edges, "u", "v", k = 2, rounds = 3)
+        .orderBy("id").collect().toSeq)
     }
     assert(results.distinct.size == 1,
       s"modes diverged: ${modes.zip(results.map(_.size))}")
-    assert(results.head.nonEmpty) // the planted exact copy must pair
+    assert(results.head.nonEmpty) // the two triangles must survive the prune
   }
 
   test("triangleCount(materializeOriented) is identical under every mode") {
@@ -203,9 +201,9 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("unknown mode fails fast with the contract message") {
-    val docs = Seq((1L, "a b c d e")).toDF("doc_id", "text")
+    val edges = Seq((1L, 2L)).toDF("u", "v")
     val e = intercept[IllegalArgumentException] {
-      withMode("cache")(Dedup.simhashNearDups(docs).collect())
+      withMode("cache")(Graph.kCore(edges, "u", "v", k = 1).collect())
     }
     assert(e.getMessage.contains(Materialize.ConfKey))
   }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.TextAnalysis
+import graft.functions.SketchFunctions
+import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -75,6 +76,57 @@ object Oracles {
       xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
         element_at(sig, b * rowsPerBand + r + 1))): _*)
     }: _*)
+
+  /** `Dedup.minhashNearDups` with the textbook bucket SELF-JOIN for
+    * candidates: the same shingle hashes, bands and exact-Jaccard verify,
+    * but pairs come from an equi-join on (band, band hash) — which plans
+    * the signature pass once per join side.
+    */
+  def minhashNearDupsSelfJoin(docs: DataFrame, shingleK: Int, numHashes: Int,
+      bands: Int, threshold: Double): DataFrame = {
+    val sh = docs.select(col("doc_id"),
+      TextAnalysis.shingleHashes(col("text"), shingleK).as("sh"))
+    val banded = sh.filter(size(col("sh")) > 0).select(col("doc_id"),
+      posexplode(SketchFunctions.lsh_bands(col("sh"), numHashes, bands)).as(Seq("band", "bh")))
+    banded.select(col("band"), col("bh"), col("doc_id").as("a_id"))
+      .join(banded.select(col("band"), col("bh"), col("doc_id").as("b_id")),
+        Seq("band", "bh"))
+      .filter(col("a_id") < col("b_id"))
+      .select("a_id", "b_id").distinct()
+      .join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
+      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
+      .withColumn("jaccard", Dedup.jaccardOfShingleArrays(col("a_sh"), col("b_sh")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
+  }
+
+  /** `Dedup.winnowingNearDups` as a document-frequency join plus a
+    * fingerprint SELF-JOIN, instead of one grouped relation: the
+    * fingerprint pass is planned once per leaf occurrence (~6×).
+    */
+  def winnowingNearDupsSelfJoin(docs: DataFrame, k: Int, w: Int,
+      minContainment: Double, maxDocFreq: Int): DataFrame = {
+    val exploded = docs.select(col("doc_id"),
+      explode(TextAnalysis.winnowingFingerprints(col("text"), k, w)).as("fp"))
+    val dfByFp = exploded.groupBy("fp").agg(count(lit(1)).as("df"))
+    val kept = exploded.join(dfByFp.filter(col("df") <= maxDocFreq).select("fp"), "fp")
+    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("n_fps"))
+    val pairable = exploded.join(
+      dfByFp.filter(col("df") >= 2 && col("df") <= maxDocFreq).select("fp"), "fp")
+    val shared = pairable.select(col("fp"), col("doc_id").as("a_id"))
+      .join(pairable.select(col("fp"), col("doc_id").as("b_id")), "fp")
+      .filter(col("a_id") < col("b_id"))
+      .groupBy("a_id", "b_id")
+      .agg(count(lit(1)).as("shared_fps"))
+    shared
+      .join(sizes.select(col("doc_id").as("a_id"), col("n_fps").as("a_n")), "a_id")
+      .join(sizes.select(col("doc_id").as("b_id"), col("n_fps").as("b_n")), "b_id")
+      .withColumn("containment",
+        col("shared_fps").cast("double") / least(col("a_n"), col("b_n")))
+      .filter(col("containment") >= minContainment)
+      .select(col("a_id"), col("b_id"), col("shared_fps"),
+        round(col("containment"), 6).as("containment"))
+  }
 
   /** One stump of [[boostStumpsSlow]], with the gain it won by and the
     * best gain of any other (feature, bin) candidate that round.

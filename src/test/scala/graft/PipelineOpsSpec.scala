@@ -67,6 +67,21 @@ class PipelineOpsSpec extends SparkSpec {
       "x" -> "x", "z" -> "x", "solo" -> "solo"))
   }
 
+  test("connectedComponents releases its edge pin when the edge pass throws") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    // a range, not a local Seq: the optimizer would fold a local relation's
+    // raise_error at planning time, before any pin exists
+    val edges = spark.range(1, 5).select(
+      when(col("id") === 3L, raise_error(lit("edge pass failed")))
+        .otherwise(col("id")).as("a_id"),
+      (col("id") + 1).as("b_id"))
+    val verts = (1L to 5L).toDF("doc_id")
+    val e = intercept[Exception](Dedup.connectedComponents(edges, verts))
+    assert(e.getMessage.contains("edge pass failed"))
+    assert(persisted == before, s"leaked ${persisted -- before}")
+  }
+
   test("bucketed range join == naive theta join, across bucket widths") {
     val rnd = new scala.util.Random(11)
     val intervals = (0L until 80L).map { i =>

@@ -66,15 +66,15 @@ class ScaleProbeSpec extends SparkSpec {
 
     val grouped = Dedup.minhashNearDups(mat, shingleK = 3, numHashes = 16,
       bands = 4, threshold = 0.6).count()
-    val selfJoin = Dedup.minhashNearDups(mat, shingleK = 3, numHashes = 16,
-      bands = 4, threshold = 0.6, selfJoinPairs = true).count()
+    val selfJoin = Oracles.minhashNearDupsSelfJoin(mat, shingleK = 3, numHashes = 16,
+      bands = 4, threshold = 0.6).count()
     println(s"[probe-spec] minhash pairs grouped=$grouped selfJoin=$selfJoin")
     assert(grouped == selfJoin, "pair strategies must agree")
 
     val wGrouped = Dedup.winnowingNearDups(mat, k = 5, w = 4,
       minContainment = 0.6, maxDocFreq = 50).count()
-    val wSelfJoin = Dedup.winnowingNearDups(mat, k = 5, w = 4,
-      minContainment = 0.6, maxDocFreq = 50, selfJoinPairs = true).count()
+    val wSelfJoin = Oracles.winnowingNearDupsSelfJoin(mat, k = 5, w = 4,
+      minContainment = 0.6, maxDocFreq = 50).count()
     println(s"[probe-spec] winnowing pairs grouped=$wGrouped selfJoin=$wSelfJoin")
     assert(wGrouped == wSelfJoin, "winnowing formulations must agree")
   }
