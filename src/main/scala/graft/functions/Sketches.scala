@@ -169,6 +169,95 @@ case class LshBands(child: Expression, numHashes: Int, bands: Int)
   override def prettyName: String = "lsh_bands"
 }
 
+/** Stopword language ID of an array<string> token list → the label
+  * whose stopword list the tokens hit most. ONE loop over the tokens
+  * against a token → languages index counts every language at once (a
+  * stopword shared by several lists counts for each), where the column
+  * form ran one `size(filter(tokens, array_contains(list, t)))` pass per
+  * language per reference — an interpreted `ArrayFilter` each, since it
+  * has no codegen. Most hits wins; ties go to the alphabetically first
+  * language; zero hits, and null input, give "und". Returns the label
+  * itself, never a hits array picked from by reference: CollapseProject
+  * would inline the kernel into every pick (the trap [[LshBands]]
+  * records).
+  */
+case class LangId(child: Expression, stopwords: Map[String, Seq[String]])
+    extends UnaryExpression with SketchCodegen {
+
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"lang_id expects array<string>, got ${t.sql}")
+  }
+
+  @transient private lazy val labels: Array[UTF8String] =
+    stopwords.keys.toArray.sorted.map(UTF8String.fromString)
+
+  @transient private lazy val index: java.util.HashMap[UTF8String, Array[Int]] = {
+    val m = new java.util.HashMap[UTF8String, Array[Int]]()
+    for ((label, i) <- labels.zipWithIndex; w <- stopwords(label.toString).distinct) {
+      val k = UTF8String.fromString(w)
+      m.put(k, m.getOrDefault(k, Array.emptyIntArray) :+ i)
+    }
+    m
+  }
+
+  private val Und = UTF8String.fromString("und")
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    kernel(child.eval(input))
+
+  /** Null tokens are a valid input ("und"), so the generated code calls
+    * the kernel outside the null-safe wrapper the other sketches use.
+    */
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("langIdExpr", this, classOf[SketchCodegen].getName)
+    val c = child.genCode(ctx)
+    val javaType = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .javaType(dataType)
+    ev.copy(code = code"""
+      ${c.code}
+      $javaType ${ev.value} = ($javaType) $ref.kernel(${c.isNull} ? null : ${c.value});""",
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override def kernel(input: Any): AnyRef = {
+    if (input == null) return Und
+    val arr = input.asInstanceOf[ArrayData]
+    val hits = new Array[Int](labels.length)
+    var i = 0
+    val n = arr.numElements()
+    while (i < n) {
+      if (!arr.isNullAt(i)) {
+        val langs = index.get(arr.getUTF8String(i))
+        if (langs != null) {
+          var j = 0
+          while (j < langs.length) { hits(langs(j)) += 1; j += 1 }
+        }
+      }
+      i += 1
+    }
+    // strict > over the alphabetical order: a tie keeps the earlier label
+    var best = -1
+    var bestHits = 0
+    var l = 0
+    while (l < hits.length) {
+      if (hits(l) > bestHits) { best = l; bestHits = hits(l) }
+      l += 1
+    }
+    if (best < 0) Und else labels(best)
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "lang_id"
+}
+
 /** 64-bit SimHash of an array<string> token list → long. Per token: base
   * xxhash64; each of the 64 signature bits is the majority vote of that
   * bit across token hashes (ties → 0). One loop, no intermediate arrays,
@@ -526,4 +615,7 @@ object SketchFunctions {
 
   def simhash64(tokens: Column): Column =
     GraftSqlBridge.column(SimHash64(GraftSqlBridge.expression(tokens)))
+
+  def lang_id(tokens: Column, stopwords: Map[String, Seq[String]]): Column =
+    GraftSqlBridge.column(LangId(GraftSqlBridge.expression(tokens), stopwords))
 }

@@ -25,6 +25,21 @@ import org.apache.spark.sql.functions._
   *
   * Each stage is optional (None/empty config skips it) so ablations and
   * incremental rollouts reuse the same entry point.
+  *
+  * Pin point: when the near-dup stage runs, the exact-dedup output is
+  * pinned once with [[Materialize]]. Near-dup reads it five times
+  * (minhash shingling, both verify sides, the `connectedComponents`
+  * vertices, the keep semi-join), decontamination and the mixture's
+  * count collect read the survivors again, and the prefix behind it
+  * crosses the exact-dedup shuffle — so unpinned, each read re-ran the
+  * scan, language, quality and exact-dedup stages (8 corpus scans a
+  * call; 2 with the pin). The pin's job is a SQL execution, so
+  * [[curateObserved]]'s upstream counts are delivered by it. The pin
+  * outlives the call — the returned frame reads it — and is freed by
+  * [[Materialize.sweep]] at the caller's query boundary, or by Spark's
+  * ContextCleaner once the frame is garbage-collected (Materialize
+  * keeps only weak references). Under `graft.materialize.mode=off`
+  * nothing is pinned and the results are the same.
   */
 object Curation {
 
@@ -103,11 +118,14 @@ object Curation {
           .select("doc_id")
         note("lm_filter", qualified.join(scores, Seq("doc_id"), "left_semi"))
     }
-    val exact =
+    val deduped =
       if (!config.dedupExact) lmFiltered
       else note("exact_dedup", Dedup.exactRows(
         lmFiltered.withColumn("__fp", TextAnalysis.fingerprint(col("text"))),
         "__fp", "doc_id").drop("__fp"))
+    // the pin point (see the object doc): near-dup makes it multi-consumer
+    val exact =
+      if (config.nearDupThreshold.isEmpty) deduped else Materialize(deduped)
     val nearDeduped = config.nearDupThreshold match {
       case None => exact
       case Some(t) =>

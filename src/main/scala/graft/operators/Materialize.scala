@@ -34,6 +34,12 @@ import org.apache.spark.storage.StorageLevel
   *    (observed round 10). Run iterative operators under
   *    `localCheckpoint` or `persist`.
   *
+  * Both pinning modes run their eager job as a SQL execution of the
+  * pinned frame's plan (see GraftSqlBridge), so a `Dataset.observe`
+  * upstream of a pin is delivered by the pin's own job: the pinned
+  * frame's flat plan no longer holds the CollectMetrics node, and a
+  * bare RDD action would leave its `Observation` waiting forever.
+  *
   * The RDD-level checkpoints inside the label-propagation loop
   * ([[Dedup]] connected components) are NOT governed by this knob: they
   * exist to reset Catalyst plan statistics, not to dedup consumers (see

@@ -205,7 +205,7 @@ object Pq {
     * FAISS IVFPQ layout from the two operators this engine already has.
     * The serving relation carries only (id, cell, codes): at 10¹⁰
     * vectors that is ~(16+m) bytes a row instead of 16+4d, and written
-    * `partitionBy("cell")` the optional cell prefilter becomes physical
+    * `partitionBy("cell")` the cell prefilter becomes physical
     * partition pruning, so a probe READS nprobe/numCells of the index.
     * Each query routes to its `nprobe` nearest cells (driver math over
     * the tiny centroid model, same cosine/tie rule as CentroidArgmax)
@@ -213,7 +213,7 @@ object Pq {
     * query relation is a bounded batch (see [[DefaultMaxQueryBatch]]).
     */
   def ivfPqQuery(index: Similarity.IvfIndex, model: PqModel, queries: DataFrame,
-      topK: Int, nprobe: Int, pruneCells: Boolean = true,
+      topK: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = index.assigned.sparkSession
     import spark.implicits._
@@ -243,12 +243,10 @@ object Pq {
       (qid, cells, table)
     }.toSeq
     val qdf = broadcast(qRows.toDF("query_id", "cells", "qtable"))
-    // optional physical prefilter: the distinct probed cells — a few
-    // thousand values for any sane batch — pushed as an IN predicate;
-    // over a cell-partitioned index that is partition pruning
-    val probeSide =
-      if (!pruneCells) enc
-      else enc.filter(col("cell").isin(qRows.flatMap(_._2).distinct: _*))
+    // physical prefilter: the distinct probed cells — a few thousand
+    // values for any sane batch — pushed as an IN predicate; over a
+    // cell-partitioned index that is partition pruning
+    val probeSide = enc.filter(col("cell").isin(qRows.flatMap(_._2).distinct: _*))
     val scored = qdf
       .join(probeSide,
         array_contains(col("cells"), col("cell")) && col("query_id") =!= col("neighbor_id"))

@@ -232,15 +232,13 @@ object Similarity {
     * and ranks only those cells' members. The probe relation (queries ×
     * nprobe rows) broadcasts against the index, so the indexed corpus is
     * scanned once and never shuffled; compared pairs shrink by
-    * ~cells/nprobe vs brute force. With `pruneCells` (default), the
-    * probed cell ids — a few thousand values for any sane query batch —
-    * are collected and pushed as an IN filter on the index: over an
-    * index WRITTEN `partitionBy("cell")`, that becomes partition pruning
-    * and the scan physically reads only the probed cells, not the
-    * corpus.
+    * ~cells/nprobe vs brute force. The probed cell ids — a few
+    * thousand values for any sane query batch — are collected and
+    * pushed as an IN filter on the index: over an index WRITTEN
+    * `partitionBy("cell")`, that becomes partition pruning and the scan
+    * physically reads only the probed cells, not the corpus.
     */
-  def ivfQuery(index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int,
-      pruneCells: Boolean = true): DataFrame = {
+  def ivfQuery(index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val spark = index.assigned.sparkSession
     import spark.implicits._
     val queriesV = broadcast(
@@ -254,12 +252,8 @@ object Similarity {
       .select(col("query_id"), col("id").as("cell"))
       .join(queriesV, "query_id")
 
-    val indexSide =
-      if (!pruneCells) index.assigned
-      else {
-        val cells = probed.select("cell").distinct().as[Long].collect()
-        index.assigned.filter(col("cell").isin(cells: _*))
-      }
+    val cells = probed.select("cell").distinct().as[Long].collect()
+    val indexSide = index.assigned.filter(col("cell").isin(cells: _*))
     // hint at the use site: hinting `probed` once at construction would
     // also ride into the cell-collect subplan above, where there is no
     // join for it to attach to (Spark logs a dropped-hint warning)

@@ -4,9 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines over the
-  * `documents` table (doc_id, text, lang, source, n_chars). All are pure
-  * codegen'd column expressions — per-row, embarrassingly parallel, no
-  * shuffle, so they stream through 100 TB at scan speed.
+  * `documents` table (doc_id, text, lang, source, n_chars). The per-row
+  * ones are column expressions — embarrassingly parallel, no shuffle, so
+  * they stream through 100 TB at scan speed. Language ID is one native
+  * kernel ([[langId]]: a single loop over the tokens counts every
+  * language); forms built on `filter`/`transform` lambdas, such as
+  * [[stopwordHits]], run interpreted, since Spark's higher-order
+  * functions have no codegen.
   */
 object TextAnalysis {
 
@@ -110,17 +114,13 @@ object TextAnalysis {
       array(stopwords(lang).map(lit): _*), t)))
 
   /** Language-ID heuristic: most stopword hits wins; ties resolve in fixed
-    * (alphabetical) language order; zero hits everywhere → "und". Integer
-    * comparisons only — no float boundary risk between engines.
+    * (alphabetical) language order; zero hits everywhere, or null text →
+    * "und". Integer comparisons only — no float boundary risk between
+    * engines. One pass: the `lang_id` kernel counts every language's hits
+    * over [[tokens]] in a single loop (graft.functions.LangId).
     */
-  def langId(text: Column): Column = {
-    val ordered = stopwords.keys.toSeq.sorted
-    val hits = ordered.map(l => stopwordHits(text, l))
-    val best = hits.reduce((a, b) => greatest(a, b))
-    ordered.zip(hits).foldRight(lit("und")) { case ((l, h), acc) =>
-      when(best > 0 && h === best, lit(l)).otherwise(acc)
-    }
-  }
+  def langId(text: Column): Column =
+    graft.functions.SketchFunctions.lang_id(tokens(text), stopwords)
 
   /** Language-ID with a CONFIDENCE MARGIN: the winning language's
     * stopword-hit count minus the runner-up's — the gate a curation

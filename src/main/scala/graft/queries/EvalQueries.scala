@@ -47,8 +47,8 @@ object EvalQueries {
       score(col("text")).as("sc"))
 
   /** Shared confusion-cell table for the langid evaluations (ml1, ml5):
-    * one corpus pass (langId runs interpreted: 20 stopword-hit
-    * `ArrayFilter` passes a row, and `ArrayFilter` has no codegen), ONE
+    * one corpus pass (langId is one native `lang_id` kernel call a row:
+    * a single loop over the tokens counts every language's hits), ONE
     * partial-agg shuffle to the O(|langs|²) (actual, predicted, o)
     * table, pinned — every margin both consumers need re-aggregates
     * the tiny cell table, never the corpus.
@@ -78,8 +78,8 @@ object EvalQueries {
     // precision / recall / F1 in exact ×1e6 fixed point (tp·1e6 and
     // 2·tp·1e6 fit BIGINT up to ~4.6e12 true positives — beyond any
     // 100 TB corpus's document count; numerators non-negative so DIV
-    // and // agree). Plan: one map pass (the langId argmax is a
-    // codegen'd integer expression), ONE partial-agg shuffle to the
+    // and // agree). Plan: one map pass (the langId argmax is the
+    // one-loop native `lang_id` kernel), ONE partial-agg shuffle to the
     // (actual × predicted) cell table — O(|langs|²) rows, pinned once —
     // then all three margins re-aggregate the tiny cell table, never
     // the corpus. Precision is NULL for a class never predicted (0/0),

@@ -37,11 +37,26 @@ object GraftSqlBridge {
       : (DataFrame, org.apache.spark.rdd.RDD[_]) = {
     val classicDf = df.asInstanceOf[classic.Dataset[Row]]
     val spark = classicDf.sparkSession
-    val rdd = classicDf.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
+    val rdd = asSqlExecution(classicDf) {
+      val r = classicDf.queryExecution.toRdd.map(_.copy())
+      r.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      r.count()
+      r
+    }
     (spark.internalCreateDataFrame(rdd, classicDf.schema), rdd)
   }
+
+  /** Run a pin's eager job as a tracked SQL execution of the pinned
+    * frame's own QueryExecution — what `Dataset.localCheckpoint` does
+    * through `withAction`. A bare RDD action is invisible to the SQL
+    * listeners, so the `Observation`s of `Dataset.observe` nodes inside
+    * the pinned plan would never be delivered: the pinned frame's plan
+    * is a flat scan with no CollectMetrics left, and `Observation.get`
+    * would block forever. Nests under a caller's execution (a
+    * `foreachBatch` body already holds one).
+    */
+  private def asSqlExecution[T](df: classic.Dataset[Row])(body: => T): T =
+    execution.SQLExecution.withNewExecutionId(df.queryExecution, Some("materialize"))(body)
 
   /** localCheckpoint-mode pin with MEASURED statistics — the fix for the
     * iterative-loop planning blow-up `Dataset.localCheckpoint` has in its
@@ -65,9 +80,11 @@ object GraftSqlBridge {
     val spark = classicDf.sparkSession
     // same row copy Dataset.checkpoint performs — codegen reuses
     // UnsafeRow buffers per partition; caching uncopied rows corrupts
-    val rdd = classicDf.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val rowCount = rdd.count()
+    val (rdd, rowCount) = asSqlExecution(classicDf) {
+      val r = classicDf.queryExecution.toRdd.map(_.copy())
+      r.localCheckpoint()
+      (r, r.count())
+    }
     // Prefer the TRUE post-checkpoint block size; when the block manager
     // has no entry or reports 0 (empty result — nothing was stored — or
     // a racing eviction), never fall through to None: LogicalRDD's

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Curation
+import graft.operators.{Curation, Materialize}
 import org.apache.spark.sql.functions._
 
 /** End-to-end curation pipeline: each stage drops exactly the planted
@@ -14,23 +14,28 @@ class CurationSpec extends SparkSpec {
   private val base = "the cat and the dog walked to the park and it was " +
     "a fine day for every one of them to play"
 
+  /** One doc per stage offender, plus two survivors (1 and 7). */
+  private def fixtureDocs = Seq(
+    (1L, base, "s0"),                                    // survives
+    (2L, "der hund und die katze sind mit den kindern zu dem haus " +
+      "gelaufen und das war ein guter tag", "s0"),       // german -> language
+    (3L, "the end", "s0"),                               // short -> quality
+    (4L, base, "s0"),                                    // exact dup of 1
+    (5L, base.replace("play", "rest"), "s0"),            // near dup of 1
+    (6L, "this sentence contains the secret benchmark overlap eight gram " +
+      "sequence right here in the middle of it and some extra words " +
+      "to pad the length out", "s0"),                    // contaminated
+    (7L, "a quick brown fox jumped over a lazy dog near the river bank " +
+      "where children were playing games in the bright afternoon sun", "s0"))
+    .toDF("doc_id", "text", "source")
+
+  private def fixtureBench = Seq(
+    (100L, "the secret benchmark overlap eight gram sequence right"))
+    .toDF("doc_id", "text")
+
   test("curate: language -> quality -> exact -> near-dup -> decontaminate") {
-    val docs = Seq(
-      (1L, base, "s0"),                                    // survives
-      (2L, "der hund und die katze sind mit den kindern zu dem haus " +
-        "gelaufen und das war ein guter tag", "s0"),       // german -> language
-      (3L, "the end", "s0"),                               // short -> quality
-      (4L, base, "s0"),                                    // exact dup of 1
-      (5L, base.replace("play", "rest"), "s0"),            // near dup of 1
-      (6L, "this sentence contains the secret benchmark overlap eight gram " +
-        "sequence right here in the middle of it and some extra words " +
-        "to pad the length out", "s0"),                    // contaminated
-      (7L, "a quick brown fox jumped over a lazy dog near the river bank " +
-        "where children were playing games in the bright afternoon sun", "s0"))
-      .toDF("doc_id", "text", "source")
-    val bench = Seq(
-      (100L, "the secret benchmark overlap eight gram sequence right"))
-      .toDF("doc_id", "text")
+    val docs = fixtureDocs
+    val bench = fixtureBench
 
     val audit = scala.collection.mutable.Buffer.empty[Curation.StageCount]
     val out = Curation.curate(docs, Curation.Config(
@@ -52,6 +57,32 @@ class CurationSpec extends SparkSpec {
     assert(outObs.select("doc_id").as[Long].collect().toSet == Set(1L, 7L))
     assert(stageCounts().map(s => s.stage -> s.rows).toList ==
       audit.map(s => s.stage -> s.rows).toList)
+  }
+
+  test("curateObserved: same survivors and audit counts under every materialize mode") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val config = Curation.Config(
+      languages = Set("en"), minTokens = 20, dedupExact = true,
+      nearDupThreshold = Some(0.7), benchmark = Some(fixtureBench))
+    for (mode <- Seq("localCheckpoint", "persist", "off")) {
+      spark.conf.set(Materialize.ConfKey, mode)
+      try {
+        val audit = scala.collection.mutable.Buffer.empty[Curation.StageCount]
+        val out = Curation.curate(fixtureDocs, config, audit = Some(audit))
+        assert(out.select("doc_id").as[Long].collect().toSet == Set(1L, 7L), s"mode=$mode")
+        val (outObs, stageCounts) = Curation.curateObserved(fixtureDocs, config)
+        assert(outObs.select("doc_id").as[Long].collect().toSet == Set(1L, 7L), s"mode=$mode")
+        // bounded: a pin that swallowed the upstream observations would
+        // block counts() forever
+        val observed = Await.result(Future(stageCounts()),
+          scala.concurrent.duration.Duration(60, "s"))
+        assert(observed.map(s => s.stage -> s.rows).toList ==
+          audit.map(s => s.stage -> s.rows).toList, s"mode=$mode")
+        assert(audit.map(_.stage).toList == List(
+          "language", "quality", "exact_dedup", "near_dedup", "decontaminate"))
+      } finally spark.conf.unset(Materialize.ConfKey)
+    }
   }
 
   test("curate: LM band-pass drops the boilerplate and garble tails") {

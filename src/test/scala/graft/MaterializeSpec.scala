@@ -200,6 +200,54 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  /** `Observation.get` with a bounded wait: a pin that swallows the
+    * observation fails here in a minute instead of stalling the suite.
+    */
+  private def observedRows(obs: org.apache.spark.sql.Observation): Long = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future(obs.get("rows").asInstanceOf[Long]),
+      scala.concurrent.duration.Duration(60, "s"))
+  }
+
+  test("a pin delivers the observations upstream of it, under every mode") {
+    for (mode <- modes) withMode(mode) {
+      val obs = org.apache.spark.sql.Observation(s"pin_upstream_$mode")
+      val observed = spark.range(0, 100, 1, 3)
+        .select(col("id"), (col("id") % 7L).as("g"))
+        .observe(obs, count(lit(1)).as("rows"))
+      val pinned = Materialize(observed.filter(col("g") =!= 0L))
+      assert(pinned.groupBy("g").count().count() == 6L)
+      assert(observedRows(obs) == 100L, s"mode=$mode")
+      Materialize.releaseSuperseded(pinned)
+    }
+  }
+
+  test("a pin inside a foreachBatch body delivers its observations") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    for (mode <- Seq("localCheckpoint", "persist")) withMode(mode) {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val mem = MemoryStream[Long]
+      // the micro-batch already runs inside a SQL execution, so the
+      // pin's execution nests under the caller's id
+      val q = mem.toDF().writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          val obs = org.apache.spark.sql.Observation()
+          val pinned = Materialize(batch.observe(obs, count(lit(1)).as("rows")))
+          got.add(pinned.count())
+          got.add(observedRows(obs))
+          Materialize.releaseSuperseded(pinned)
+          ()
+        }.start()
+      try {
+        mem.addData(1L to 10L)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(got.toArray.toSeq == Seq(10L, 10L), s"mode=$mode")
+    }
+  }
+
   test("unknown mode fails fast with the contract message") {
     val edges = Seq((1L, 2L)).toDF("u", "v")
     val e = intercept[IllegalArgumentException] {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.SketchFunctions
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, Pq, Similarity, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -39,6 +39,47 @@ object Oracles {
       .otherwise(array_distinct(transform(
         sequence(lit(1), size(toks) - lit(k - 1)),
         i => concat_ws(" ", slice(toks, i, lit(k))))))
+  }
+
+  /** `TextAnalysis.langId` as plain columns: one `stopwordHits`
+    * (`size(filter(tokens, array_contains(list, t)))`, an interpreted
+    * `ArrayFilter`) per language, `greatest` of them, then a `when` chain
+    * over the alphabetical order. CollapseProject inlines every hit
+    * count into both the `greatest` and its `when` arm, so a row pays
+    * for 20 filters with four languages.
+    */
+  def langIdHof(text: Column): Column = {
+    val ordered = TextAnalysis.stopwords.keys.toSeq.sorted
+    val hits = ordered.map(l => TextAnalysis.stopwordHits(text, l))
+    val best = hits.reduce((a, b) => greatest(a, b))
+    ordered.zip(hits).foldRight(lit("und")) { case ((l, h), acc) =>
+      when(best > 0 && h === best, lit(l)).otherwise(acc)
+    }
+  }
+
+  /** `Pq.ivfPqQuery` without its cell prefilter, one query at a time:
+    * route the query to its `nprobe` nearest cells (the same driver
+    * cosine and (−cosine, cell) order), then plain `Pq.query` over the
+    * encoded members of those cells only.
+    */
+  def ivfPqQueryUnpruned(index: Similarity.IvfIndex, model: Pq.PqModel,
+      queries: DataFrame, topK: Int, nprobe: Int): DataFrame = {
+    def cosine(a: Seq[Double], b: Seq[Double]): Double = {
+      val dot = a.zip(b).map { case (x, y) => x * y }.sum
+      val nn = math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum)
+      if (nn == 0.0) 0.0 else dot / nn
+    }
+    val qs = queries.select(col("vec_id"), col("embedding").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    qs.toSeq.map { case (qid, qv) =>
+      val cells = index.cents
+        .map { case (cid, cv) => (cid, cosine(qv, cv.map(_.toDouble))) }
+        .sortBy { case (cid, cs) => (-cs, cid) }.take(nprobe).map(_._1)
+      val members = index.assigned.filter(col("cell").isin(cells: _*))
+        .select(col("neighbor_id").as("vec_id"),
+          Pq.codesCol(col("c_vec"), model).as("codes"))
+      Pq.query(members, queries.filter(col("vec_id") === qid), model, topK)
+    }.reduce(_ unionByName _)
   }
 
   /** The naive O(n²) theta-join form of `Geo.radiusSelfJoin`. */

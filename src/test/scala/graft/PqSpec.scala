@@ -97,9 +97,8 @@ class PqSpec extends SparkSpec {
       .join(df.select(col("vec_id").as("query_id"), col("cluster").as("q_cluster")), "query_id")
     assert(narrow.count() == 4 * 10)
     assert(narrow.filter(col("n_cluster") =!= col("q_cluster")).count() == 0)
-    // pruneCells must not change results
-    val unpruned = Pq.ivfPqQuery(index, model, queries, topK = 10, nprobe = 3,
-      pruneCells = false)
+    // the cell prefilter must not change results
+    val unpruned = Oracles.ivfPqQueryUnpruned(index, model, queries, topK = 10, nprobe = 3)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     val pruned = Pq.ivfPqQuery(index, model, queries, topK = 10, nprobe = 3)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
