@@ -12,28 +12,38 @@ import org.apache.spark.sql.functions._
   *   2. quality filter         (map-only integer signals)
   *   3. LM band-pass           (optional; corpus-trained bigram model
   *                              drops the boilerplate and garble tails)
-  *   4. exact dedup            (fingerprint groupBy, keep smallest id)
-  *   5. near-dup clustering    (MinHash-LSH pairs → connected components
-  *                              → keep each cluster's representative)
-  *   6. decontamination        (anti-join against benchmark k-grams)
+  *   4. exact dedup            (one hash repartition on the fingerprint,
+  *                              keep the smallest id per group)
+  *   5. near-dup clustering    (MinHash-LSH pairs → connected-component
+  *                              labels of the edge-touched docs → drop the
+  *                              non-representatives by a broadcast
+  *                              anti-join)
+  *   6. decontamination        (map-only probe of each doc's k-grams
+  *                              against the broadcast benchmark k-gram set)
   *   7. source-mixture sample  (target proportions, map-only rates)
   *
   * Stage order matters at 100 TB: the map-only filters run at scan speed
   * and shrink the corpus BEFORE anything shuffles; exact dedup halves
   * typical crawl volume before the (costlier) near-dup pass; the
-  * benchmark anti-join and the mixture sampler touch only survivors.
+  * benchmark probe and the mixture sampler touch only survivors.
   *
   * Each stage is optional (None/empty config skips it) so ablations and
   * incremental rollouts reuse the same entry point.
   *
   * Pin point: when the near-dup stage runs, the exact-dedup output is
-  * pinned once with [[Materialize]]. Near-dup reads it five times
-  * (minhash shingling, both verify sides, the `connectedComponents`
-  * vertices, the keep semi-join), decontamination and the mixture's
-  * count collect read the survivors again, and the prefix behind it
-  * crosses the exact-dedup shuffle — so unpinned, each read re-ran the
-  * scan, language, quality and exact-dedup stages (8 corpus scans a
-  * call; 2 with the pin). The pin's job is a SQL execution, so
+  * pinned once with [[Materialize]]. Near-dup reads it three times
+  * (minhash shingling, both verify sides) plus once for the keep
+  * anti-join, and the mixture's count collect and the caller's action
+  * read the survivors again; the prefix behind it crosses the exact-dedup
+  * shuffle, so unpinned, each read re-ran the scan, language, quality and
+  * exact-dedup stages. Exact dedup reads its input once, so one call
+  * scans the corpus once — in the pin's job. Behind the pin every stage
+  * is map-only on the pin's partitions (the session's shuffle width, kept
+  * by exact dedup's explicit repartition): the near-dup keep broadcasts
+  * the non-representative ids, decontamination probes a broadcast set,
+  * and the mixture applies per-source rates, so the write's plan holds
+  * no shuffle after the pin (the mixture's per-source count is a
+  * separate small job). The pin's job is a SQL execution, so
   * [[curateObserved]]'s upstream counts are delivered by it. The pin
   * outlives the call — the returned frame reads it — and is freed by
   * [[Materialize.sweep]] at the caller's query boundary, or by Spark's
@@ -131,13 +141,15 @@ object Curation {
       case Some(t) =>
         val pairs = Dedup.minhashNearDups(exact, shingleK = 3,
           numHashes = 16, bands = 4, threshold = t)
-        val comps = Dedup.connectedComponents(
-          pairs, exact.select("doc_id"))
         // keep each cluster's representative = the component label
-        // (smallest doc_id in the cluster); singletons keep themselves
-        note("near_dedup", exact.join(
-          comps.filter(col("doc_id") === col("comp")).select("doc_id"),
-          Seq("doc_id"), "left_semi"))
+        // (smallest doc_id in the cluster); singletons keep themselves, so
+        // only the edge-touched labels are needed: drop the docs whose
+        // label is another doc. Those are bare ids, at most one per
+        // edge-touched vertex — broadcast on either path, so the pin side
+        // is never shuffled.
+        val nonReps = Dedup.componentLabels(pairs)
+          .filter(col("doc_id") =!= col("comp")).select("doc_id")
+        note("near_dedup", exact.join(broadcast(nonReps), Seq("doc_id"), "left_anti"))
     }
     val clean = config.benchmark match {
       case None => nearDeduped

@@ -1,12 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for training-data pipelines, each designed
   * around its 100 TB shuffle shape. Exact dedup is one hash-partitioned
   * groupBy on the dedup key (map-side partial aggregation halves the
-  * shuffle), never a window sort.
+  * shuffle); its full-row form [[exactRows]] is one hash repartition on
+  * the key with a group-min window inside each partition — one pass over
+  * its input, never a join back to it.
   *
   * The near-duplicate family is filter-then-verify over two shared
   * steps; each operator keeps only its blocking key, its pruning and its
@@ -40,16 +44,29 @@ object Dedup {
   def exact(df: DataFrame, byCol: String, keyCol: String): DataFrame =
     df.groupBy(col(byCol)).agg(min(col(keyCol)).as(keyCol), count(lit(1)).as("copies"))
 
-  /** Exact dedup returning the FULL surviving rows (the row holding the
-    * smallest `keyCol` per `byCol` value): groupBy+min then a semi-join on
-    * (byCol, keyCol) — still one partial-agg shuffle plus one join keyed
-    * the same way, no window sort, deterministic keeper.
+  /** Exact dedup returning the FULL surviving rows (the rows holding the
+    * smallest `keyCol` per `byCol` value; rows tied on (byCol, keyCol) all
+    * survive, and a null `byCol` or `keyCol` drops the row): ONE pass —
+    * one hash repartition on `byCol`, then a group-min window inside each
+    * partition. A groupBy+min semi-joined back to its input reads `df`
+    * twice, so everything upstream of it (scan, filters, fingerprint)
+    * runs twice per row.
+    *
+    * The partition count is explicit (the session's
+    * `spark.sql.shuffle.partitions`): a plain window's shuffle is one AQE
+    * may coalesce, and on a small input it coalesced to ONE partition —
+    * every stage downstream of the dedup (a pin, near-dup, the write)
+    * then ran in a single task. A repartition by number is never
+    * coalesced, so the output keeps the full width.
     */
-  def exactRows(df: DataFrame, byCol: String, keyCol: String): DataFrame =
-    df.join(
-      df.groupBy(col(byCol)).agg(min(col(keyCol)).as(keyCol)),
-      Seq(byCol, keyCol), "left_semi")
-      .select(df.columns.map(col).toIndexedSeq: _*) // using-join puts keys first; restore order
+  def exactRows(df: DataFrame, byCol: String, keyCol: String): DataFrame = {
+    val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.filter(col(byCol).isNotNull)
+      .repartition(width, col(byCol))
+      .withColumn("__min_key", min(col(keyCol)).over(Window.partitionBy(col(byCol))))
+      .filter(col(keyCol) === col("__min_key"))
+      .drop("__min_key")
+  }
 
   /** Exact dedup on a fingerprint (formatting-insensitive). */
   def exactByFingerprint(docs: DataFrame): DataFrame =
@@ -347,12 +364,30 @@ object Dedup {
     * which is generated from the corpus itself.
     *
     * Output: (id, comp) where comp = smallest vertex id in the component;
-    * vertices absent from `edges` keep comp = id.
+    * vertices absent from `edges` keep comp = id. The two halves are
+    * [[componentLabels]] (the edge-touched vertices) and the singleton
+    * fill here.
     */
   def connectedComponents(edges: DataFrame, vertices: DataFrame,
       idCol: String = "doc_id", aCol: String = "a_id", bCol: String = "b_id",
       maxIter: Int = 50, loopShufflePartitions: Int = 0,
-      localEdgeThreshold: Long = 1000000L): DataFrame = {
+      localEdgeThreshold: Long = 1000000L): DataFrame =
+    vertices.select(col(idCol))
+      .join(componentLabels(edges, idCol, aCol, bCol, maxIter,
+        loopShufflePartitions, localEdgeThreshold), Seq(idCol), "left")
+      .select(col(idCol), coalesce(col("comp"), col(idCol)).as("comp"))
+
+  /** The labels half of [[connectedComponents]]: (idCol, comp) for the
+    * edge-touched vertices only, computed eagerly. A caller that only
+    * needs the non-representatives (comp ≠ id) anti-joins these and never
+    * reads the vertex set. On the small path the table is a LocalRelation
+    * under a broadcast hint, so that join runs without a job of its own
+    * and keeps the corpus side map-only; above the threshold it
+    * shuffle-joins keyed on id.
+    */
+  private[operators] def componentLabels(edges: DataFrame, idCol: String = "doc_id",
+      aCol: String = "a_id", bCol: String = "b_id", maxIter: Int = 50,
+      loopShufflePartitions: Int = 0, localEdgeThreshold: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
     val eSrc = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
     val idType = eSrc.schema.head.dataType
@@ -366,17 +401,8 @@ object Dedup {
         if (small) localUnionFind(eRdd, idType, ord.get, spark)
         else labelPropagation(eRdd, idType, spark, maxIter, loopShufflePartitions))
     } finally eRdd.unpersist(blocking = false)
-    // Everything not in an edge is a singleton. On the small path the
-    // label table is a LocalRelation (driver array) — broadcast it so the
-    // corpus side stays a single map-only pass. Above the threshold it
-    // shuffle-joins keyed on id.
-    val labelSide = {
-      val t = touched.withColumnRenamed("id", idCol)
-      if (small) broadcast(t) else t
-    }
-    vertices.select(col(idCol))
-      .join(labelSide, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("comp"), col(idCol)).as("comp"))
+    val t = touched.withColumnRenamed("id", idCol)
+    if (small) broadcast(t) else t
   }
 
   /** Soft dedup: instead of DROPPING near-duplicates, keep every doc
@@ -657,13 +683,58 @@ object Dedup {
   }
 
   /** Drop every training document sharing at least one word `k`-gram with
-    * the benchmark set (anti-join against [[contaminationReport]]).
+    * the benchmark set — the keep side of [[contaminationReport]].
+    *
+    * A map-only exact probe, not a join: the benchmark side's k-grams are
+    * collected once, at call time, into a driver hash set that is
+    * broadcast, and each training row loops over its own k-grams against
+    * it (graft.functions.AnyInSet: string hash, then byte equality; stops
+    * at the first hit). An id-keyed anti-join against the report would
+    * read `train` twice (once for the report, once for the keep): the
+    * planner then hash-partitions the full rows by id, AQE coalesces that
+    * small shuffle to one partition, and the k-gram explode and probe run
+    * in a single task, once per action on the result. The probe keeps the
+    * input's partitioning and plans no exchange. It is as scale-safe as
+    * the join: the join's `BroadcastExchange` collects this same set onto
+    * the driver.
+    *
+    * The collect is capped at [[MaxBenchShingles]] k-gram occurrences
+    * (each benchmark doc's distinct k-grams, summed over docs); past it
+    * the call fails with [[BenchmarkTooLargeException]] before anything
+    * larger reaches the driver — [[decontaminateBloom]] is the path for
+    * such a benchmark. A row is judged on its own text: null text and
+    * docs shorter than `k` tokens are kept.
     */
   def decontaminate(train: DataFrame, bench: DataFrame, k: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    train.join(contaminationReport(train, bench, k, idCol, textCol)
-        .select(col(idCol)),
-      Seq(idCol), "left_anti")
+      textCol: String = "text"): DataFrame = {
+    val grams = bench.select(explode(TextAnalysis.shingles(col(textCol), k)))
+      .limit(MaxBenchShingles + 1).collect()
+    checkBenchShingles(grams.length)
+    val set = new java.util.HashSet[UTF8String](grams.length * 2)
+    grams.foreach(r => set.add(UTF8String.fromString(r.getString(0))))
+    val probe = graft.functions.AnyInSet.anyInSet(
+      TextAnalysis.shingles(col(textCol), k), train.sparkSession.sparkContext.broadcast(set))
+    // null text -> null k-gram array -> null probe: no k-grams, no overlap
+    train.filter(!coalesce(probe, lit(false)))
+  }
+
+  /** The most benchmark k-gram occurrences [[decontaminate]] collects
+    * onto the driver; it bounds the driver's string set and each
+    * executor's broadcast copy of it.
+    */
+  final val MaxBenchShingles = 2000000
+
+  /** Thrown by [[decontaminate]] when the benchmark side has more than
+    * [[MaxBenchShingles]] k-gram occurrences.
+    */
+  final class BenchmarkTooLargeException extends IllegalArgumentException(
+    s"the benchmark side has more than $MaxBenchShingles k-gram occurrences, too " +
+      "many to collect onto the driver for the exact probe; use " +
+      "Dedup.decontaminateBloom, which builds its filter distributed")
+
+  /** The bound check of [[decontaminate]]'s driver collect. */
+  private[graft] def checkBenchShingles(occurrences: Long): Unit =
+    if (occurrences > MaxBenchShingles) throw new BenchmarkTooLargeException
 
   /** Incremental exact dedup — the daily-batch shape of [[exactByFingerprint]]:
     * from a new `batch`, keep only rows that are (a) the first occurrence

@@ -586,12 +586,17 @@ object SimilarityQueries {
     // of corpus size; the rankings themselves reuse ret1/v1 machinery.
     QueryDef("ret3_rrf_fusion",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
+        // rank inside the top-50 list: one sorted list of (score, −id),
+        // descending (score desc nulls last, then doc_id asc), read back
+        // by position — a bare window would run the same ≤50 rows
+        // through an unpartitioned WindowExec
         val lex = graft.operators.Retrieval.bm25TopK(
             t(s, dir, "documents"), "doc_id", "text",
             rrfTerms, k1 = 1.2, b = 0.75, topK = 50)
-          .withColumn("rank", row_number().over(
-            Window.orderBy(col("score").desc, col("doc_id"))))
+          .agg(sort_array(collect_list(struct(col("score"), (-col("doc_id")).as("neg_id"))),
+            asc = false).as("l"))
+          .select(posexplode(col("l")))
+          .select((-col("col.neg_id")).as("doc_id"), (col("pos") + 1).as("rank"))
         val emb = t(s, dir, "embeddings")
         val sem = graft.operators.Similarity.bruteForceKnn(
             emb, emb.filter(col("vec_id") === 0), k = 50)

@@ -74,6 +74,35 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(got.sameElements(Array((1L, "x", "keep"), (3L, "y", "only"))))
   }
 
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("exactRows equals the semi-join form and keeps the shuffle width") {
+    val d = Seq[(Option[Long], Option[String], String)](
+      (Some(1L), Some("x"), "a"), (Some(5L), Some("x"), "b"),
+      (Some(1L), Some("x"), "c"),                         // tied (key, id): both survive
+      (None, Some("y"), "d"), (Some(4L), Some("y"), "e"), // null id never survives
+      (Some(2L), None, "f"), (Some(3L), None, "g"),       // null key: dropped
+      (None, Some("z"), "h"), (None, Some("z"), "i"))     // all-null-id group: dropped
+      .toDF("doc_id", "text", "extra")
+    val got = Dedup.exactRows(d, "text", "doc_id")
+    assert(got.columns.toSeq == d.columns.toSeq)
+    assert(sortedRows(got) == Seq("1|x|a", "1|x|c", "4|y|e"))
+    assert(sortedRows(got) == sortedRows(Oracles.exactRowsSemiJoin(d, "text", "doc_id")))
+
+    // a plain window's shuffle is coalesced by AQE (to one partition on
+    // an input this small); the explicit width must survive it
+    val dir = java.nio.file.Files.createTempDirectory("exact_rows").toString
+    spark.range(0, 400).select(col("id").as("doc_id"), (col("id") % 37).as("k"))
+      .repartition(4).write.mode("overwrite").parquet(dir)
+    val in = spark.read.parquet(dir)
+    assert(in.inputFiles.length == 4)
+    val out = Dedup.exactRows(in, "k", "doc_id")
+    assert(out.rdd.getNumPartitions == spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    assert(sortedRows(out) == sortedRows(Oracles.exactRowsSemiJoin(in, "k", "doc_id")))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("minhash LSH finds every planted near-dup (recall vs exact jaccard)") {
     val exact = Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.8)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
@@ -479,6 +508,56 @@ class DedupSimilaritySpec extends SparkSpec {
     val clean = Dedup.decontaminate(train, bench, k = 8)
       .select("doc_id").as[Long].collect()
     assert(clean.sameElements(Array(1L)))
+  }
+
+  test("decontaminate equals the anti-join form and plans no exchange and no join") {
+    val g = (1 to 10).map(i => s"w$i").mkString(" ")
+    val train = Seq[(Long, Option[String])](
+      (1L, None),                                          // null text
+      (2L, Some("w1 w2 w3")),                              // shorter than k
+      (3L, Some(s"pre $g post")),                          // shares an 8-gram
+      (4L, Some(g.toUpperCase)),                           // case variant
+      (5L, Some("  " + g.replace(" ", " \t\n ") + " ")),   // whitespace variant
+      (6L, Some("w1 w2 w3 w4 w5 w6 w7 x w9 w10")),         // 7-token overlaps only
+      (7L, Some("words that appear in no benchmark document of this fixture")))
+      .toDF("doc_id", "text")
+    val benches = Seq(
+      "plain" -> Seq[(Long, Option[String])]((100L, Some(g)), (101L, None)),
+      "variant" -> Seq[(Long, Option[String])]((102L, Some(" W3 W4\tw5 W6 w7 w8 W9  w10 "))),
+      "empty" -> Seq.empty[(Long, Option[String])],
+      "short" -> Seq[(Long, Option[String])]((103L, Some("w1 w2"))))
+    val want = Map("plain" -> Set(1L, 2L, 6L, 7L), "variant" -> Set(1L, 2L, 6L, 7L),
+      "empty" -> (1L to 7L).toSet, "short" -> (1L to 7L).toSet)
+    for ((name, rows) <- benches) {
+      val bench = rows.toDF("doc_id", "text")
+      val got = Dedup.decontaminate(train, bench, k = 8).select("doc_id").as[Long].collect().toSet
+      val oracle = Oracles.decontaminateJoin(train, bench, k = 8)
+        .select("doc_id").as[Long].collect().toSet
+      assert(got == oracle, name)
+      assert(got == want(name), name)
+    }
+
+    // over a Parquet corpus: the probe rides the scan, with no exchange
+    // and no join (the anti-join form plans both)
+    val bench = docs.filter(col("doc_id") % 17 === 3)
+    val probe = Dedup.decontaminate(docs.filter(col("doc_id") % 17 =!= 3), bench, k = 8)
+    val kept = probe.select("doc_id").as[Long].collect().toSet
+    assert(kept == Oracles.decontaminateJoin(docs.filter(col("doc_id") % 17 =!= 3), bench, k = 8)
+      .select("doc_id").as[Long].collect().toSet)
+    val plan = probe.queryExecution.executedPlan
+    val offending = plan.collect {
+      case p: org.apache.spark.sql.execution.exchange.Exchange => p
+      case p: org.apache.spark.sql.execution.joins.BaseJoinExec => p
+      case p: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => p
+    }
+    assert(offending.isEmpty, s"decontaminate must be map-only:\n$plan")
+  }
+
+  test("decontaminate's benchmark collect is capped with a named error") {
+    Dedup.checkBenchShingles(Dedup.MaxBenchShingles)
+    val e = intercept[Dedup.BenchmarkTooLargeException](
+      Dedup.checkBenchShingles(Dedup.MaxBenchShingles + 1L))
+    assert(e.getMessage.contains("decontaminateBloom"))
   }
 
   test("weighted reservoir membership is partitioning-invariant and weight-sensitive") {

@@ -106,6 +106,24 @@ object Oracles {
       .agg(sum(when(col("__t").isNotNull, 1L).otherwise(0L)).as("matches"))
   }
 
+  /** `Dedup.exactRows` as groupBy+min semi-joined back on (byCol, keyCol):
+    * the same survivors, but the input is read twice.
+    */
+  def exactRowsSemiJoin(df: DataFrame, byCol: String, keyCol: String): DataFrame =
+    df.join(
+      df.groupBy(col(byCol)).agg(min(col(keyCol)).as(keyCol)),
+      Seq(byCol, keyCol), "left_semi")
+      .select(df.columns.map(col).toIndexedSeq: _*) // using-join puts keys first; restore order
+
+  /** `Dedup.decontaminate` as an id-keyed anti-join against
+    * `Dedup.contaminationReport`: the train side is planned twice.
+    */
+  def decontaminateJoin(train: DataFrame, bench: DataFrame, k: Int,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    train.join(Dedup.contaminationReport(train, bench, k, idCol, textCol)
+        .select(col(idCol)),
+      Seq(idCol), "left_anti")
+
   /** LSH banding of a minhash signature as plain columns: `bands` rows of
     * `rowsPerBand` hashes each, band key xxhash64(band index, slice). The
     * fused `lsh_bands` expression must be bit-identical to it. Feeding it

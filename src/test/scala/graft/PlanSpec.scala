@@ -447,6 +447,17 @@ class PlanSpec extends SparkSpec {
       s"corpus stats row must broadcast in:\n$plan")
   }
 
+  test("rrf fusion ranks its bm25 top-k without an unpartitioned window") {
+    val exec = q("ret3_rrf_fusion").queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val bare = exec.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec if w.partitionSpec.isEmpty => w
+    }
+    assert(bare.isEmpty, s"bm25 ranks must come from the top-k list in:\n$exec")
+  }
+
   test("autocorrelation windows run over the aggregated series, not the event log") {
     val df = q("ts1_autocorr")
     val plan = df.queryExecution.executedPlan.toString
