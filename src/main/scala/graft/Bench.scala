@@ -22,7 +22,10 @@ object Bench {
     // timing (BenchKit.warmFiles — see its doc for why a count() can't)
     BenchKit.warmFiles(new java.io.File(sfDir))
     // Best-of-N per query (default 2): the first run pays page-cache and
-    // codegen warmup; the min reflects steady-state engine cost.
+    // codegen warmup; the min reflects steady-state engine cost. The
+    // session's generated-class cache (GraftSession.CodegenCacheEntries)
+    // holds the whole registry's classes, so a query's classes stay
+    // compiled between its runs and across the board.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // Contention sentinel (BenchKit.sentinel): re-timed at start /

@@ -23,6 +23,25 @@ class ExtensionsSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
   }
 
+  test("the shipped session keeps every generated class: a repeated query compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt ==
+      GraftSession.CodegenCacheEntries)
+    // 128 shapes that differ only in an inlined integer literal, so each
+    // compiles its own classes: one pass needs more than Spark's default
+    // 100-entry cache, which would evict every class before its reuse
+    val shapes = (1 to 128).map(i => s"id * $i + ${i + 7} AS v")
+    def compiles(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      shapes.foreach(e => spark.range(0, 1, 1, 1).selectExpr(e).collect())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = compiles()
+    assert(first > 100, s"the shapes must outgrow the default cache; compiled $first")
+    val second = compiles()
+    assert(second == 0, s"a repeated pass recompiled $second generated classes")
+  }
+
   test("custom expressions are callable from SQL via GraftExtensions") {
     val row = spark.sql(
       """SELECT

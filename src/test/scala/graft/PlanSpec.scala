@@ -458,6 +458,35 @@ class PlanSpec extends SparkSpec {
     assert(bare.isEmpty, s"bm25 ranks must come from the top-k list in:\n$exec")
   }
 
+  test("the bare windows that remain run over an aggregate keyed by their order column") {
+    // w11's running user count and stat4's two rank maps keep an
+    // unpartitioned window (one task) by design. Each is bounded because
+    // its input is the aggregate grouped by exactly its ORDER BY column:
+    // one row per day for w11, one per distinct l_quantity / l_extendedprice
+    // for stat4 (the rank maps are broadcast, the query's stated domain).
+    // A rewrite that feeds either window the event log or lineitem fails here.
+    for ((name, nWindows) <- Seq("w11_cumulative_users" -> 1, "stat4_spearman" -> 2)) {
+      val exec = q(name).queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      val bare = exec.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec if w.partitionSpec.isEmpty => w
+      }
+      assert(bare.size == nWindows, s"$name: expected $nWindows bare windows in:\n$exec")
+      bare.foreach { w =>
+        val agg = w.child.collectFirst {
+          case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+        }
+        val orderIds = w.orderSpec.flatMap(_.child.references).map(_.exprId).toSet
+        val keyIds = agg.toSeq.flatMap(_.groupingExpressions.flatMap(_.references))
+          .map(_.exprId).toSet
+        assert(orderIds.nonEmpty && keyIds == orderIds,
+          s"$name: bare window not over an aggregate keyed by its order column:\n$w")
+      }
+    }
+  }
+
   test("autocorrelation windows run over the aggregated series, not the event log") {
     val df = q("ts1_autocorr")
     val plan = df.queryExecution.executedPlan.toString

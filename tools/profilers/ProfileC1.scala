@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiler for the c1_dedup_clusters bench query — per-stage
@@ -11,11 +10,8 @@ import org.apache.spark.sql.functions._
 object ProfileC1 {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiler for the h2_equidepth bench query — isolates the exact
@@ -10,11 +9,8 @@ import org.apache.spark.sql.functions._
 object ProfileH2 {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -1,13 +1,14 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Scratch per-query profiler for the optimization round — runs named
-  * registry queries under the Bench session config and reports, per run:
-  * wall seconds, Spark job count, stage count, task count, summed task
-  * time, shuffle bytes, and per-job wall breakdown with the job's
-  * callsite description. Not part of the engine; run manually:
+  * registry queries on the shipped session (`GraftSession.local`) and
+  * reports, per run: wall seconds, Spark job count, stage count, task
+  * count, generated-class compiles (a recompiling query shows up here),
+  * summed task time, shuffle bytes, and per-job wall breakdown with the
+  * job's callsite description. Not part of the engine; run manually:
   *
   *   SPARK_GRAFT_PROFILE=stat13_mad_outliers,ml11_per_group_logreg \
   *     sbt "runMain graft.ProfileQuery"
@@ -69,17 +70,11 @@ object ProfileQuery {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val names = sys.env.getOrElse("SPARK_GRAFT_PROFILE", "stat13_mad_outliers")
       .split(",").toSeq
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     BenchKit.warmFiles(new java.io.File(sfDir))
@@ -93,13 +88,15 @@ object ProfileQuery {
         graft.operators.Materialize.sweep()
         System.gc()
         acc.reset()
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         // listener bus is async; give it a beat to drain
         Thread.sleep(300)
         println(f"run $r: wall=$wall%.3f s rows=$n jobs=${acc.jobs.size} " +
-          f"stages=${acc.stages} tasks=${acc.tasks} " +
+          f"stages=${acc.stages} tasks=${acc.tasks} compiles=$compiles " +
           f"taskTime=${acc.taskTimeMs / 1e3}%.2f s " +
           f"shufR=${acc.shuffleRead / 1e6}%.1f MB shufW=${acc.shuffleWrite / 1e6}%.1f MB")
         if (r == runs) {

@@ -1,17 +1,14 @@
 package graft
 
 import graft.sources.IO
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiler for the partitioned-sink bench queries. */
 object ProfileSink {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
         sys.env.getOrElse("PROF_COMMIT_ALGO", "1"))
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
