@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -33,13 +34,12 @@ import org.apache.spark.sql.types._
   * bounded-heap and the struct-max formulations). Null input → null.
   */
 case class CentroidArgmax(child: Expression, local: Array[Array[Double]],
-    bc: Option[org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]] = None)
+    bc: Option[Broadcast[Array[Array[Double]]]] = None)
     extends UnaryExpression with CodegenFallback {
 
   require(local.nonEmpty || bc.nonEmpty, "need at least one centroid")
 
-  @transient private lazy val centroids: Array[Array[Double]] =
-    bc.map(_.value).getOrElse(local)
+  @transient private lazy val scorer = new CentroidArgmax.Scorer(local, bc)
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
@@ -59,46 +59,24 @@ case class CentroidArgmax(child: Expression, local: Array[Array[Double]],
     case _ => throw new IllegalStateException("unreachable")
   }
 
-  @transient private lazy val centNorms: Array[Double] =
-    centroids.map(c => math.sqrt(c.map(x => x * x).sum))
-
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
     val n = v.numElements()
     val vec = new Array[Double](n)
     var i = 0
-    var vn = 0.0
     while (i < n) {
       // null elements contribute 0.0 — checked explicitly, because
       // reading a null slot from unsafe array data is undefined
-      val x = if (v.isNullAt(i)) 0.0 else elemType match {
+      vec(i) = if (v.isNullAt(i)) 0.0 else elemType match {
         case FloatType => v.getFloat(i).toDouble
         case DoubleType => v.getDouble(i)
         case IntegerType => v.getInt(i).toDouble
         case LongType => v.getLong(i).toDouble
         case _ => throw new IllegalStateException("unreachable")
       }
-      vec(i) = x; vn += x * x
       i += 1
     }
-    vn = math.sqrt(vn)
-    var best = 0
-    var bestScore = Double.NegativeInfinity
-    var c = 0
-    while (c < centroids.length) {
-      val cent = centroids(c)
-      var score = 0.0
-      if (cent.length == n) {
-        var dot = 0.0
-        var j = 0
-        while (j < n) { dot += vec(j) * cent(j); j += 1 }
-        val nn = vn * centNorms(c)
-        score = if (nn == 0.0) 0.0 else dot / nn
-      } else score = Double.NegativeInfinity // dim mismatch: never chosen
-      if (score > bestScore) { bestScore = score; best = c }
-      c += 1
-    }
-    best
+    scorer.nearest(vec)
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -112,16 +90,66 @@ object CentroidArgmax {
     */
   val broadcastThreshold: Long = 1L << 20
 
+  /** The cosine-argmax kernel over one centroid matrix, shared by the
+    * expression above and by RDD folds ([[graft.operators.Similarity.refineCentroids]]).
+    * Serializable: a closure or plan carries the matrix itself, or only
+    * the broadcast handle when `bc` is set; the matrix and its norms
+    * resolve once per deserialized copy, i.e. once per task.
+    */
+  final class Scorer(val local: Array[Array[Double]],
+      val bc: Option[Broadcast[Array[Array[Double]]]]) extends Serializable {
+
+    @transient private lazy val centroids: Array[Array[Double]] =
+      bc.map(_.value).getOrElse(local)
+
+    @transient private lazy val centNorms: Array[Double] =
+      centroids.map(c => math.sqrt(c.map(x => x * x).sum))
+
+    /** Index of the centroid most cosine-similar to `vec`, ties → smallest. */
+    def nearest(vec: Array[Double]): Int = {
+      val n = vec.length
+      var vn = 0.0
+      var i = 0
+      while (i < n) { vn += vec(i) * vec(i); i += 1 }
+      vn = math.sqrt(vn)
+      var best = 0
+      var bestScore = Double.NegativeInfinity
+      var c = 0
+      while (c < centroids.length) {
+        val cent = centroids(c)
+        val score =
+          if (cent.length != n) Double.NegativeInfinity // dim mismatch: never chosen
+          else {
+            var dot = 0.0
+            var j = 0
+            while (j < n) { dot += vec(j) * cent(j); j += 1 }
+            val nn = vn * centNorms(c)
+            if (nn == 0.0) 0.0 else dot / nn
+          }
+        if (score > bestScore) { bestScore = score; best = c }
+        c += 1
+      }
+      best
+    }
+
+    /** Drop the broadcast copy, if any, once no job reads this scorer. */
+    def release(): Unit = bc.foreach(_.destroy())
+  }
+
+  /** A [[Scorer]] shipped by the broadcast rule: a matrix of at least
+    * `threshold` elements travels as a broadcast variable, a smaller one
+    * inside the plan or closure.
+    */
+  def scorer(centroids: Array[Array[Double]], threshold: Long = broadcastThreshold): Scorer = {
+    require(centroids.nonEmpty, "need at least one centroid")
+    if (centroids.length.toLong * centroids.head.length >= threshold)
+      new Scorer(Array.empty, Some(SparkSession.active.sparkContext.broadcast(centroids)))
+    else new Scorer(centroids, None)
+  }
+
   def argmax(vec: Column, centroids: Array[Array[Double]],
       threshold: Long = broadcastThreshold): Column = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    val elems = centroids.length.toLong * centroids.head.length
-    val expr =
-      if (elems >= threshold) {
-        val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-        CentroidArgmax(GraftSqlBridge.expression(vec), Array.empty,
-          Some(sc.broadcast(centroids)))
-      } else CentroidArgmax(GraftSqlBridge.expression(vec), centroids)
-    GraftSqlBridge.column(expr)
+    val s = scorer(centroids, threshold)
+    GraftSqlBridge.column(CentroidArgmax(GraftSqlBridge.expression(vec), s.local, s.bc))
   }
 }

@@ -370,11 +370,10 @@ object Dedup {
     */
   def connectedComponents(edges: DataFrame, vertices: DataFrame,
       idCol: String = "doc_id", aCol: String = "a_id", bCol: String = "b_id",
-      maxIter: Int = 50, loopShufflePartitions: Int = 0,
       localEdgeThreshold: Long = 1000000L): DataFrame =
     vertices.select(col(idCol))
-      .join(componentLabels(edges, idCol, aCol, bCol, maxIter,
-        loopShufflePartitions, localEdgeThreshold), Seq(idCol), "left")
+      .join(componentLabels(edges, idCol, aCol, bCol, localEdgeThreshold),
+        Seq(idCol), "left")
       .select(col(idCol), coalesce(col("comp"), col(idCol)).as("comp"))
 
   /** The labels half of [[connectedComponents]]: (idCol, comp) for the
@@ -386,8 +385,8 @@ object Dedup {
     * shuffle-joins keyed on id.
     */
   private[operators] def componentLabels(edges: DataFrame, idCol: String = "doc_id",
-      aCol: String = "a_id", bCol: String = "b_id", maxIter: Int = 50,
-      loopShufflePartitions: Int = 0, localEdgeThreshold: Long = 1000000L): DataFrame = {
+      aCol: String = "a_id", bCol: String = "b_id",
+      localEdgeThreshold: Long = 1000000L): DataFrame = {
     val spark = edges.sparkSession
     val eSrc = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
     val idType = eSrc.schema.head.dataType
@@ -399,7 +398,7 @@ object Dedup {
       val small = eRdd.count() <= localEdgeThreshold && ord.isDefined
       (small,
         if (small) localUnionFind(eRdd, idType, ord.get, spark)
-        else labelPropagation(eRdd, idType, spark, maxIter, loopShufflePartitions))
+        else labelPropagation(eRdd, idType, spark))
     } finally eRdd.unpersist(blocking = false)
     val t = touched.withColumnRenamed("id", idCol)
     if (small) broadcast(t) else t
@@ -483,6 +482,11 @@ object Dedup {
       StructType(Seq(StructField("id", idType), StructField("comp", idType))))
   }
 
+  /** Round cap of [[labelPropagation]], a guard rather than a tuning
+    * knob: pointer jumping converges in O(log diameter) rounds.
+    */
+  private val MaxLabelRounds = 50
+
   /** Distributed path: min-label propagation + pointer jumping over the
     * edge-touched vertex set.
     *
@@ -503,17 +507,16 @@ object Dedup {
     */
   private def labelPropagation(eRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
       idType: org.apache.spark.sql.types.DataType,
-      spark: org.apache.spark.sql.SparkSession,
-      maxIter: Int, loopShufflePartitions: Int): DataFrame = {
+      spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
     // The loop's relations are label tables, orders of magnitude smaller
     // than the corpus that produced the edges — running its joins at the
     // session's corpus-sized shuffle width burns a fixed per-round
     // scheduling cost that dominates the whole operator. The loop runs in
     // a CHILD session (same SparkContext, its own SQLConf) with the width
-    // scoped down (explicit param wins; else a label-count heuristic) —
-    // mutating the caller's session conf would silently re-plan any
-    // concurrent query on it at the scoped-down width.
+    // scoped down by a label-count heuristic — mutating the caller's
+    // session conf would silently re-plan any concurrent query on it at
+    // the scoped-down width.
     val loop = spark.newSession()
     val eSchema = StructType(Seq(
       StructField("src", idType), StructField("dst", idType)))
@@ -534,15 +537,13 @@ object Dedup {
       prevPin = rdd
       loop.createDataFrame(rdd, df.schema)
     }
-    val loopWidth =
-      if (loopShufflePartitions > 0) loopShufflePartitions
-      else math.max(1, math.min(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        (labels.count() / 250000L).toInt + 1))
+    val loopWidth = math.max(1, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      (labels.count() / 250000L).toInt + 1))
     loop.conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
     var changed = 1L
     var it = 0
-    while (changed > 0 && it < maxIter) {
+    while (changed > 0 && it < MaxLabelRounds) {
         val neighborMin = sym
           .join(labels.select(col("id").as("dst"), col("comp")), "dst")
           .groupBy(col("src").as("id")).agg(min(col("comp")).as("ncomp"))

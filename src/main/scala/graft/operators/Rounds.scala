@@ -4,14 +4,14 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** Helpers for DRIVER-BOUND iterative rounds (IRLS/Newton, boosting,
-  * fixed-point strength updates, centroid refinement): loops that run
-  * one tiny-output aggregation job per round over a pinned relation.
-  * [[Rounds.pinned]] runs such rounds as RDD folds; [[Rounds.driverBound]]
-  * scopes the physical-planning settings of the ones that stay SQL.
+  * k-means centroid refinement): loops that run one tiny-output
+  * aggregation per round over a pinned relation. [[Rounds.pinned]] is
+  * the one round-loop helper: it runs such rounds as RDD folds and never
+  * touches the caller's session conf, so a loop can share its session
+  * with concurrent queries.
   */
 object Rounds {
 
@@ -53,9 +53,9 @@ object Rounds {
       (rows + RowsPerTask - 1) / RowsPerTask)).toInt
 
   /** RDD-NATIVE ROUNDS for a driver-bound iterative loop (the Newton
-    * trainers, histogram boosting): `body` runs its rounds as
-    * `treeAggregate` folds over a pinned RDD of `n` rows instead of as
-    * one SQL aggregation per round.
+    * trainers, histogram boosting, k-means refinement): `body` runs its
+    * rounds as `treeAggregate` folds over a pinned RDD of `n` rows
+    * instead of as one SQL aggregation per round.
     *
     * Why (round 17, profiled): the loops' cost was never compute. A
     * bare, bit-identical 2·d·bins aggregate over an unchanged 5000-row
@@ -115,64 +115,5 @@ object Rounds {
 
     private[Rounds] def release(): Unit =
       (cur :: superseded).foreach(_.unpersist(blocking = false))
-  }
-
-  /** Scoped physical-planning overrides for DRIVER-BOUND iterative
-    * rounds that stay SQL (fixed-point strength updates, centroid
-    * refinement). Profiled on ml11, before its rounds moved to
-    * [[pinned]] (19 IRLS rounds over a 4838-row pinned
-    * projection, sf0.1/local[32]): 66 Spark jobs but only ~0.6 s of
-    * summed task time in ~3.6 s of wall — the cost is driver scheduling
-    * and per-round (re)planning, not compute. Two session settings feed
-    * that overhead and buy nothing for this shape:
-    *
-    *  - AQE turns every round into a multi-job query (one job per
-    *    shuffle stage plus the broadcast) and re-optimizes a plan whose
-    *    reduce side it cannot improve — the aggregate output is
-    *    O(groups · state) KILOBYTES by the caller's own contract.
-    *  - The session shuffle-partition count fans those few KB into
-    *    dozens of sub-millisecond reduce tasks per round.
-    *
-    * [[driverBound]] scopes `spark.sql.adaptive.enabled = false` plus a
-    * shuffle-partition count DERIVED from the loop's own reduce size to
-    * the loop body, and restores the prior values on every exit path.
-    * Measured on ml11: 3.13 s → 2.25 s (min-of-3 each) for the fit.
-    *
-    * This is deliberately NOT blanket config (guide §1.2: config last,
-    * and never constants tuned to one box): `reduceBytes` names the
-    * per-round aggregate output size — groups × per-group state — so the
-    * partition count scales with the problem (clamped to
-    * [1, defaultParallelism] at ~64 KiB per reduce task) and the
-    * override dies with the loop. Callers whose per-round relations are
-    * CORPUS-sized (graph rounds over edge tables) must size
-    * `reduceBytes` from the real per-round relation, not the collected
-    * state, or not use this at all. MEASURED HAZARD: do not wrap loops
-    * containing HINT-LESS joins — with AQE off their strategy falls back
-    * to the static planner, which cannot prove a pinned-RDD build side
-    * small (no statistics) and picks sort-merge; kCore under this helper
-    * went 1.5 → 8.2 s at sf0.1 before the revert. Of the wrapped loops,
-    * centroid refinement joins nothing; bradleyTerryFit's strength joins
-    * are hint-less but
-    * both sides are the SAME O(items) cardinality, so sort-merge is the
-    * right strategy with or without AQE (measured neutral). NOT
-    * thread-safe against concurrent
-    * queries on the same session (session-level conf) — the engine's
-    * batch drivers run queries serially; the streaming path never calls
-    * into these trainers.
-    */
-  def driverBound[T](spark: SparkSession, reduceBytes: Long)(body: => T): T = {
-    val conf = spark.conf
-    val aqeBefore = conf.get("spark.sql.adaptive.enabled")
-    val partsBefore = conf.get("spark.sql.shuffle.partitions")
-    val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      reduceBytes / (64L << 10)))
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body
-    finally {
-      conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      conf.set("spark.sql.shuffle.partitions", partsBefore)
-    }
   }
 }

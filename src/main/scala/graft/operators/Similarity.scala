@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -155,25 +155,25 @@ object Similarity {
       cents)
   }
 
-  /** Spherical k-means (Lloyd) refinement of IVF centroids. Each round:
-    * map-only argmax assignment (centroid matrix inside one expression),
-    * then per-(cell, dimension) mean via posexplode + one
-    * partial-aggregated groupBy — the shuffle ships n×d skinny rows,
-    * never embeddings, and nothing is ever O(n²). The per-round driver
-    * state is k×d doubles.
+  /** Spherical k-means (Lloyd) refinement of IVF centroids. Each round
+    * is one [[Rounds.pinned]] fold: per row, the cosine argmax
+    * (graft.functions.CentroidArgmax's kernel; the matrix ships by its
+    * broadcast rule), then per-(cell, dimension) sums and counts into a
+    * k×d accumulator — the state a `groupBy(cell, dimension)` keeps,
+    * with no Catalyst analysis and no shuffle per round. Nothing is ever
+    * O(n²); the per-round driver state is k×d longs.
     *
-    * Vectors are unit-normalized ONCE up front: cosine assignment is
-    * scale-invariant, but the centroid update is not — the mean of
-    * normalized members is the direction maximizing the cell's summed
-    * cosine (the spherical k-means M-step), which makes the objective
-    * monotone non-decreasing round over round.
+    * Vectors are unit-normalized ONCE up front (SQL, then pinned as an
+    * RDD): cosine assignment is scale-invariant, but the centroid update
+    * is not — the mean of normalized members is the direction maximizing
+    * the cell's summed cosine (the spherical k-means M-step), which makes
+    * the objective monotone non-decreasing round over round.
     *
-    * Dimension sums use fixed-point longs (×10⁹) so the refined model is
-    * bit-identical under any partitioning — double summation order would
-    * otherwise leak into centroid bits and, through argmax ties, into
-    * cell assignments. Unit coordinates are ≤ 1, so overflow needs 10⁹
-    * rows in one cell — persist-count guard unnecessary at any realistic
-    * cell size.
+    * Dimension sums use fixed-point longs (×10⁹), which add
+    * associatively, so the refined model is bit-identical under any
+    * partitioning — double summation order would otherwise leak into
+    * centroid bits and, through argmax ties, into cell assignments. Unit
+    * coordinates are ≤ 1, so overflow needs 10⁹ rows in one cell.
     *
     * Cells that lose all members keep their previous centroid. Centroid
     * ids are stable across refinement (they remain the seed row ids).
@@ -184,41 +184,42 @@ object Similarity {
     val nrm = sqrt(aggregate(
       transform(col("embedding"), x => x.cast("double") * x.cast("double")),
       lit(0.0), (a, x) => a + x))
-    val unit = corpus.select(col("vec_id"),
+    val unit = corpus.select(
       when(nrm === 0, asDouble(col("embedding")))
         .otherwise(transform(col("embedding"), x => x.cast("double") / nrm)).as("u"))
-      .persist()
+    // a null embedding has no coordinates and drops out; one with a null
+    // element normalizes to all nulls, which adds 0 to every sum and 1 to
+    // every count — exactly what a zero vector adds
+    val rows = unit.rdd.collect { case Row(u: collection.Seq[java.lang.Double @unchecked]) =>
+      u.map(x => if (x == null) 0.0 else x.doubleValue).toArray }
+    val dims = init.headOption.map(_._2.length).getOrElse(0)
+    val kd = init.length * dims
     var cents: Seq[(Long, Array[Double])] =
       init.map { case (id, v) => (id, v.map(_.toDouble).toArray) }
-    val dims = init.headOption.map(_._2.length).getOrElse(0)
-    try {
-      // per-round reduce state is k·d (sum, count) pairs — the
-      // driver-bound round shape (Rounds.driverBound scaladoc)
-      Rounds.driverBound(corpus.sparkSession, init.length.toLong * dims * 16) {
+    Rounds.pinned(rows, unit.count()) { loop =>
       for (_ <- 0 until iters) {
-        val matrix = cents.map(_._2).toArray
-        val agg = unit
-          .withColumn("c", graft.functions.CentroidArgmax.argmax(col("u"), matrix))
-          .select(col("c"), posexplode(col("u")))
-          .groupBy("c", "pos")
-          .agg(sum(floor(col("col") * 1e9).cast("long")).as("s"),
-            count(lit(1)).as("n"))
-          .collect()
-        val byCell = agg.groupBy(_.getInt(0))
-        cents = cents.zipWithIndex.map { case ((id, old), ci) =>
-          byCell.get(ci) match {
-            case Some(rows) =>
-              val vec = new Array[Double](old.length)
-              rows.foreach { r =>
-                vec(r.getInt(1)) = r.getLong(2).toDouble / 1e9 / r.getLong(3)
-              }
-              (id, vec)
-            case None => (id, old)
+        val scorer = graft.functions.CentroidArgmax.scorer(cents.map(_._2).toArray)
+        // tot(0 until kd): fixed-point sums; tot(kd until 2kd): counts
+        val tot = try loop.fold(new Array[Long](2 * kd))({ (acc, u) =>
+          require(u.length <= dims, s"refineCentroids: a vector has ${u.length} > $dims dimensions")
+          val base = scorer.nearest(u) * dims
+          for (j <- u.indices) {
+            acc(base + j) += math.floor(u(j) * 1e9).toLong
+            acc(kd + base + j) += 1L
           }
+          acc
+        }, { (a, b) => for (i <- a.indices) a(i) += b(i); a })
+        finally scorer.release()
+        cents = cents.zipWithIndex.map { case ((id, old), ci) =>
+          val base = ci * dims
+          if (!(0 until dims).exists(j => tot(kd + base + j) > 0)) (id, old)
+          else (id, Array.tabulate(dims) { j =>
+            val n = tot(kd + base + j)
+            if (n == 0) 0.0 else tot(base + j).toDouble / 1e9 / n
+          })
         }
       }
-      }
-    } finally unit.unpersist(blocking = false)
+    }
     cents.map { case (id, v) => (id, v.map(_.toFloat).toSeq) }
   }
 

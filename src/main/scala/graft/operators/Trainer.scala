@@ -1429,10 +1429,6 @@ object Trainer {
       var r = 0
       var lmPrev = 0.0 // avg log of the CURRENT pin (all-ones → 0)
       var converged = false
-      // per-round reduce state is O(items) strength rows: one count()
-      // on the already-pinned totals sizes the loop's shuffles
-      val nItems = totals.count()
-      Rounds.driverBound(comparisons.sparkSession, nItems * 24) {
       while (r < rounds && !converged) {
         val si = strengths.select(col("item").as("i"), col("s").as("s_i"))
         val sj = strengths.select(col("item").as("j"), col("s").as("s_j"))
@@ -1471,7 +1467,6 @@ object Trainer {
         strengths = next.select(col("item"),
           (col("s") / lit(math.exp(logMean))).as("s"))
         r += 1
-      }
       }
       btRoundsRun.set(r)
       prevPin.foreach(Materialize.releaseSuperseded)

@@ -58,9 +58,6 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       e.references.nonEmpty && e.references.subsetOf(left.outputSet)
     def fromRight(e: Expression) =
       e.references.nonEmpty && e.references.subsetOf(right.outputSet)
-    def crossSide(e: Expression) =
-      e.references.intersect(left.outputSet).nonEmpty &&
-        e.references.intersect(right.outputSet).nonEmpty
 
     // with any cross-side equi-conjunct, Spark already hash-joins
     val hasEquiKey = conjuncts.exists {

@@ -43,12 +43,6 @@ object StateBackend {
     spark.conf.set(ChangelogKey, changelog.toString)
   }
 
-  /** Revert to Spark's default heap-backed provider. */
-  def useDefault(spark: SparkSession): Unit = {
-    spark.conf.unset(ProviderKey)
-    spark.conf.unset(ChangelogKey)
-  }
-
   /** Run `body` (typically: build + start + drain one streaming query)
     * with RocksDB state stores, restoring the previous backend after.
     * Queries STARTED inside keep RocksDB for their lifetime; the

@@ -285,6 +285,18 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(r1 == r2)
   }
 
+  test("refineCentroids: bit-identical to the SQL Lloyd loop, under any partitioning") {
+    val corpus = clustered(40)
+    val init = Similarity.sampleCentroids(corpus, 6)
+    def bits(cs: Seq[(Long, Seq[Float])]) =
+      cs.map { case (id, v) => (id, v.map(java.lang.Float.floatToRawIntBits)) }
+    for (it <- 0 to 3; input <- Seq(corpus, corpus.repartition(7))) {
+      val want = bits(Oracles.refineCentroidsSql(input, init, it))
+      val got = bits(Similarity.refineCentroids(input, init, it))
+      assert(got == want, s"iters=$it, ${input.rdd.getNumPartitions} partitions")
+    }
+  }
+
   test("semDedup: exact duplicates collapse, distinct directions all kept") {
     // three planted clusters plus exact duplicates of two members
     val base = clustered(20)

@@ -247,4 +247,48 @@ object Oracles {
     }.reduce(_ || _)
     a.join(b, geq && strict, "left_anti")
   }
+
+  /** `Similarity.refineCentroids` as one SQL aggregation per Lloyd round:
+    * argmax assignment in an expression, then posexplode and a
+    * (cell, dimension) groupBy of fixed-point sums and counts. Every
+    * round pays Catalyst analysis and a shuffle; the centroids it
+    * returns are the ones the RDD fold must reproduce bit for bit.
+    */
+  def refineCentroidsSql(corpus: DataFrame, init: Seq[(Long, Seq[Float])],
+      iters: Int): Seq[(Long, Seq[Float])] = {
+    if (iters <= 0) return init
+    val nrm = sqrt(aggregate(
+      transform(col("embedding"), x => x.cast("double") * x.cast("double")),
+      lit(0.0), (a, x) => a + x))
+    val unit = corpus.select(col("vec_id"),
+      when(nrm === 0, asDouble(col("embedding")))
+        .otherwise(transform(col("embedding"), x => x.cast("double") / nrm)).as("u"))
+      .persist()
+    var cents: Seq[(Long, Array[Double])] =
+      init.map { case (id, v) => (id, v.map(_.toDouble).toArray) }
+    try {
+      for (_ <- 0 until iters) {
+        val matrix = cents.map(_._2).toArray
+        val byCell = unit
+          .withColumn("c", graft.functions.CentroidArgmax.argmax(col("u"), matrix))
+          .select(col("c"), posexplode(col("u")))
+          .groupBy("c", "pos")
+          .agg(sum(floor(col("col") * 1e9).cast("long")).as("s"),
+            count(lit(1)).as("n"))
+          .collect().groupBy(_.getInt(0))
+        cents = cents.zipWithIndex.map { case ((id, old), ci) =>
+          byCell.get(ci) match {
+            case Some(rows) =>
+              val vec = new Array[Double](old.length)
+              rows.foreach { r =>
+                vec(r.getInt(1)) = r.getLong(2).toDouble / 1e9 / r.getLong(3)
+              }
+              (id, vec)
+            case None => (id, old)
+          }
+        }
+      }
+    } finally unit.unpersist(blocking = false)
+    cents.map { case (id, v) => (id, v.map(_.toFloat).toSeq) }
+  }
 }
